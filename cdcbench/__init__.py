@@ -1,0 +1,1 @@
+"""Closed-loop benchmark of the CDC engine: see README.md."""
