@@ -880,15 +880,20 @@ class LakeTable:
         3 of 128 write units commits 3 new files (the per-epoch path
         rewrites every split of every affected bucket).
 
+        The fold runs min(units, 2 × defaultParallelism) Python tasks, not
+        one per (bucket, split) unit: each task streams its units in
+        (unit, epoch) order, reading a unit's carried files when its first
+        row arrives and holding one unit's state plus one epoch's rows at
+        a time (see aligned_lww_fold_fused). Carried files are handed over
+        keyed by (bucket, split), so no driver-side partition map is
+        needed.
+
         Single-writer path (batch replay); a concurrent foreign commit
         surfaces as CommitConflict from the sequential publish loop —
         the caller re-runs and the ledger skips the committed prefix.
         Requires the full-(bucket, split) manifest layout; callers gate on
         it (replay() falls back to per-epoch merges for legacy tables)."""
-        from go_tfdata_spark.operators.arrow_fold import (
-            aligned_lww_fold_fused,
-            fold_partition_map,
-        )
+        from go_tfdata_spark.operators.arrow_fold import aligned_lww_fold_fused
 
         epochs = sorted(int(e) for e in summaries)
         base = self.snapshot()
@@ -926,12 +931,10 @@ class LakeTable:
                 "layout; replay() falls back to per-epoch merges"
             )
         splits = _WRITE_SPLITS_PER_BUCKET
-        pmap = fold_partition_map(self.spark, base.num_buckets * splits)
-        tfiles: dict[int, list] = {}
+        tfiles: dict[tuple[int, int], list[str]] = {}
         for f in tentries:
-            p = pmap[f["bucket"] * splits + f["split"]]
-            tfiles.setdefault(p, []).append(
-                (os.path.join(self.path, f["path"]), f["bucket"], f["split"])
+            tfiles.setdefault((f["bucket"], f["split"]), []).append(
+                os.path.join(self.path, f["path"])
             )
         write_dirs: dict[int, str] = {}
         for e in epochs:
@@ -947,7 +950,6 @@ class LakeTable:
             splits=splits,
             split_by=base.split_by or base.bucket_by,
             epoch_col=epoch_col,
-            epochs=epochs,
             write_dirs=write_dirs,
             target_files=tfiles,
             lineage_acc=lineage_acc,

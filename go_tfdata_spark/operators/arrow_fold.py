@@ -548,15 +548,14 @@ def aligned_lww_fold_fused(
     splits: int,
     split_by: str | list[str],
     epoch_col: str,
-    epochs: list[int],
     write_dirs: dict[int, str],
-    target_files: dict[int, list] | None = None,
+    target_files: dict[tuple[int, int], list[str]] | None = None,
     lineage_acc=None,
     parquet_codec: str = "snappy",
 ) -> DataFrame:
     """FUSED multi-epoch aligned merge: ONE scan + ONE shuffle for a chunk
-    of consecutive epochs, the winner state carried IN MEMORY across the
-    chunk inside each fold worker.
+    of consecutive epochs, each (bucket, split) unit's winner state carried
+    IN MEMORY across the chunk inside the fold task that owns the unit.
 
     The per-epoch replay re-reads the full winner table from parquet at
     the start of every epoch's fold (the target-local read) — O(table)
@@ -567,21 +566,30 @@ def aligned_lww_fold_fused(
     epoch's rows in ascending order reproduces every intermediate
     snapshot exactly (tombstones are retained rows, so state only grows).
 
-    Input `df` is physical-shape rows PLUS `epoch_col`. Rows shuffle once,
-    routed by the same (bucket, split) expression as the single-epoch
-    fold; each task buffers arrivals per epoch, then folds epochs in
-    order: state <- winner(state ∪ rows_e), writes the state of every
-    (bucket, split) that epoch touched into `write_dirs[e]` (write-in-fold
-    contract: attempt-unique files, manifest entries as output), and
-    reports that epoch's batch self-winner counts through `lineage_acc`
-    as {pid: {epoch: {(src_part, deleted): n}}} (replace-on-merge keeps
-    retries idempotent). Output rows: (path, bucket, split, nrows, epoch).
+    Input `df` is physical-shape rows PLUS `epoch_col`, holding only the
+    epochs that key `write_dirs`. Routing follows the cluster, not the
+    layout: every fold task is a Python worker with a fixed start-up cost
+    whatever its input, so rows shuffle by the unit's pid = bucket * splits
+    + split into min(units, 2 × defaultParallelism) partitions, each sorted
+    by (pid, epoch). A task then streams its input run by run. On a unit's
+    first row it reads that unit's carried files (`target_files[(bucket,
+    split)]`, absolute parquet paths) and resolves them to the unit's
+    state. At the end of each (unit, epoch) run it folds the run in,
+    state <- winner(state ∪ rows_e), and writes the state as one file under
+    `write_dirs[e]` (write-in-fold contract: attempt-unique
+    `_bucket=B/_split=S/` files, manifest entries as output). A unit with
+    no rows in an epoch writes nothing for it; the driver's manifest
+    carries its file forward. Each epoch's batch self-winner counts are
+    summed over the task's units and reported through `lineage_acc` as
+    {partition id: {epoch: {(src_part, deleted): n}}}; replace-on-merge
+    keeps retries idempotent. Output rows: (path, bucket, split, nrows,
+    epoch).
 
-    Memory: a task holds its partition's chunk rows + winner state —
-    chunk length bounds the buffered batch volume; the chunk size knob
-    lives in replay(). Target-local + write-in-fold only (the fused path
-    exists for steady-state COW replay; sparse/broadcast epochs break the
-    chunk in replay())."""
+    Memory: a task holds ONE unit's winner state plus ONE epoch run of
+    that unit's rows, however many units hash to its partition; the JVM
+    sort spills as needed. Target-local + write-in-fold only (the fused
+    path exists for steady-state COW replay; sparse/broadcast epochs break
+    the chunk in replay())."""
     import pyarrow as pa
 
     from pyspark.sql import types as T
@@ -591,8 +599,9 @@ def aligned_lww_fold_fused(
     from go_tfdata_spark.lake.table import bucket_expr, split_expr
 
     bcol, scol, ecol = "_fold_bucket", "_fold_split", "_fold_epoch"
-    for c in (bcol, scol, ecol):
-        assert c not in df.columns or c == epoch_col, c
+    clash = [c for c in (bcol, scol, ecol) if c in df.columns and c != epoch_col]
+    if clash:
+        raise ValueError(f"input already holds the fold's reserved columns {clash}")
     work = (
         df.withColumnRenamed(epoch_col, ecol)
         .withColumn(bcol, bucket_expr(bucket_by, num_buckets).cast("int"))
@@ -605,11 +614,10 @@ def aligned_lww_fold_fused(
         [pa.field(f.name, to_arrow_type(f.dataType)) for f in out_fields]
     )
     cols = [f.name for f in out_fields]
-    work_cols = cols + [bcol, scol, ecol]
     sort_cols = list(order_cols)
     slim_cols = list(dict.fromkeys([*key_cols, *sort_cols, "_src_part", "_deleted"]))
-    epochs = sorted(int(e) for e in epochs)
     wdirs = {int(e): d for e, d in write_dirs.items()}
+    tfiles = target_files or {}
     out_schema = StructType([
         StructField("path", T.StringType(), False),
         StructField("bucket", T.IntegerType(), False),
@@ -621,44 +629,38 @@ def aligned_lww_fold_fused(
     def fold(batches):
         import uuid as _uuid
 
-        import pyarrow.compute as pc
+        import numpy as np
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        state = None  # pa.Table with bcol/scol appended
-        init: list = []
-        if target_files:
-            for entry in target_files.get(pid, []):
-                path, fb, fs = entry
-                t = _conform_arrow(pq.read_table(path), pa_schema)
-                t = t.append_column(
-                    bcol, pa.array([fb] * len(t), pa.int32())
-                ).append_column(scol, pa.array([fs] * len(t), pa.int32()))
-                if len(t):
-                    init.append(t)
-        if init:
-            # pre-resolve carried state once (MOR deltas in the target file
-            # set fold to their winners here)
-            state = _winner_table(
-                pa.concat_tables(init, promote_options="default"),
-                key_cols, sort_cols,
-            )
-        per_epoch: dict[int, list] = {}
-        for rb in batches:
-            t = pa.Table.from_batches([rb]).select(work_cols)
-            for e in pc.unique(t[ecol]).to_pylist():
-                per_epoch.setdefault(int(e), []).append(
-                    t.filter(pc.equal(t[ecol], pa.scalar(e))).drop_columns([ecol])
-                )
+        part = TaskContext.get().partitionId()
         entries_out: list = []
         lin: dict[int, dict] = {}
         isb = "_fold_isb"
-        for e in epochs:
-            ebufs = per_epoch.pop(e, None)
-            if not ebufs:
-                continue  # this partition saw no rows for e: files reused
-            erows = pa.concat_tables(ebufs, promote_options="default")
+        unit = epoch = None  # (bucket, split) and epoch of the buffered run
+        state = None  # the unit's winner table
+        run: list = []
+
+        def load(u):
+            init = [
+                t for t in (
+                    _conform_arrow(pq.read_table(p), pa_schema)
+                    for p in tfiles.get(u, ())
+                ) if len(t)
+            ]
+            if not init:
+                return None
+            # pre-resolve carried state once (MOR deltas in the target file
+            # set fold to their winners here)
+            return _winner_table(
+                pa.concat_tables(init, promote_options="default"),
+                key_cols, sort_cols,
+            )
+
+        def flush():
+            nonlocal state, run
+            erows = pa.concat_tables(run, promote_options="default")
+            run = []
             if lineage_acc is not None:
                 # ONE sort per epoch: the batch self-winners ride the main
                 # fold via a per-row flag + conditional-rank aggregate
@@ -672,52 +674,65 @@ def aligned_lww_fold_fused(
                     tables.insert(0, state.append_column(
                         isb, pa.array([False] * len(state), pa.bool_())
                     ))
-                cur = (
-                    pa.concat_tables(tables, promote_options="default")
-                    if len(tables) > 1 else tables[0]
-                )
                 state, batch_slim = _winner_and_batch_table(
-                    cur, key_cols, sort_cols, isb, slim_cols
+                    pa.concat_tables(tables, promote_options="default"),
+                    key_cols, sort_cols, isb, slim_cols,
                 )
                 state = state.drop_columns([isb])
                 grp = batch_slim.select(["_src_part", "_deleted"]).group_by(
                     ["_src_part", "_deleted"], use_threads=False
                 ).aggregate([([], "count_all")])
-                counts = {}
+                counts = lin.setdefault(epoch, {})
                 for sp, dl, n in zip(
                     grp["_src_part"].to_pylist(),
                     grp["_deleted"].to_pylist(),
                     grp["count_all"].to_pylist(),
                 ):
-                    counts[(int(sp), bool(dl))] = int(n)
-                lin[e] = counts
+                    k = (int(sp), bool(dl))
+                    counts[k] = counts.get(k, 0) + int(n)
             else:
                 tables = ([state] if state is not None else []) + [erows]
                 state = _winner_table(
-                    pa.concat_tables(tables, promote_options="default")
-                    if len(tables) > 1 else tables[0],
+                    pa.concat_tables(tables, promote_options="default"),
                     key_cols, sort_cols,
                 )
-            # write the (bucket, split) states THIS epoch touched here;
-            # untouched (bucket, split) files are carried forward by the
-            # driver's manifest construction
-            combos = erows.select([bcol, scol]).group_by(
-                [bcol, scol], use_threads=False
-            ).aggregate([])
-            for b, s in zip(combos[bcol].to_pylist(), combos[scol].to_pylist()):
-                mask = pc.and_(
-                    pc.equal(state[bcol], pa.scalar(b, pa.int32())),
-                    pc.equal(state[scol], pa.scalar(s, pa.int32())),
-                )
-                part = state.filter(mask).select(cols)
-                d = os.path.join(wdirs[e], f"_bucket={int(b)}", f"_split={int(s)}")
-                os.makedirs(d, exist_ok=True)
-                fname = f"part-{pid:05d}-{_uuid.uuid4().hex}.parquet"
-                fpath = os.path.join(d, fname)
-                pq.write_table(part, fpath, compression=parquet_codec)
-                entries_out.append((fpath, int(b), int(s), len(part), e))
+            b, s = unit
+            d = os.path.join(wdirs[epoch], f"_bucket={b}", f"_split={s}")
+            os.makedirs(d, exist_ok=True)
+            # attempt-unique name: a retried/speculative twin writes its own
+            # file; only entries yielded by the WINNING attempt reach the
+            # manifest, losers become vacuum-swept orphans
+            fpath = os.path.join(d, f"part-{part:05d}-{_uuid.uuid4().hex}.parquet")
+            pq.write_table(state, fpath, compression=parquet_codec)
+            entries_out.append((fpath, b, s, len(state), epoch))
+
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            bs = rb.column(bcol).to_numpy()
+            ss = rb.column(scol).to_numpy()
+            es = rb.column(ecol).to_numpy()
+            cut = (np.flatnonzero(
+                (bs[1:] != bs[:-1]) | (ss[1:] != ss[:-1]) | (es[1:] != es[:-1])
+            ) + 1).tolist()
+            t = pa.Table.from_batches([rb]).select(cols)
+            for lo, hi in zip([0, *cut], [*cut, rb.num_rows]):
+                u, e = (int(bs[lo]), int(ss[lo])), int(es[lo])
+                if u != unit or e != epoch:
+                    if run:
+                        flush()
+                    # (bucket, split) order is pid order: split < splits
+                    if unit is not None and (u, e) < (unit, epoch):
+                        raise RuntimeError(
+                            "fused fold input is not sorted by (unit, epoch)")
+                    if u != unit:
+                        unit, state = u, load(u)
+                    epoch = e
+                run.append(t.slice(lo, hi - lo))
+        if run:
+            flush()
         if lineage_acc is not None and lin:
-            lineage_acc.add({pid: lin})
+            lineage_acc.add({part: lin})
         if entries_out:
             yield pa.RecordBatch.from_arrays(
                 [
@@ -730,8 +745,15 @@ def aligned_lww_fold_fused(
                 names=["path", "bucket", "split", "nrows", "epoch"],
             )
 
+    # Sized by the cluster, not the layout: each Python task costs a fixed
+    # ~0.25 CPU-s of worker set-up whatever its input. The 2x leaves slack
+    # for hash skew when units are spread over the tasks.
+    n_tasks = min(num_buckets * splits,
+                  2 * df.sparkSession.sparkContext.defaultParallelism)
     pid_expr = (
         F.col(bcol).cast("long") * F.lit(splits) + F.col(scol).cast("long")
     )
-    rep = work.repartition(num_buckets * splits, pid_expr)
+    rep = work.repartition(n_tasks, pid_expr).sortWithinPartitions(
+        pid_expr, F.col(ecol)
+    )
     return rep.mapInArrow(fold, out_schema)

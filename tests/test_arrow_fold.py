@@ -10,10 +10,14 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
+import pytest
 from pyspark.sql import types as T
 
 from go_tfdata_spark.lake.table import LakeTable
-from go_tfdata_spark.operators.arrow_fold import aligned_lww_fold
+from go_tfdata_spark.operators.arrow_fold import (
+    aligned_lww_fold,
+    aligned_lww_fold_fused,
+)
 
 BIG = 1152921504606859321  # > 2^53; float64 rounds it to ...59264
 
@@ -86,3 +90,17 @@ def test_merge_aligned_bigint_with_tombstone(spark, tmp_path):
     got = {(r.conv_id, r.turn_idx): (r.big, r._deleted) for r in t.read(resolve=False).collect()}
     assert got[("a", 1)] == (BIG, False)
     assert got[("b", 2)] == (None, True)
+
+
+def test_fused_fold_rejects_reserved_columns(spark, tmp_path):
+    """An input that already holds a column the fused fold reserves for its
+    layout coordinates is refused up front, also under `python -O`."""
+    df = spark.createDataFrame(
+        [(1, 0, 1, 0)], "k long, ts long, _fold_bucket int, epoch long"
+    )
+    with pytest.raises(ValueError, match="_fold_bucket"):
+        aligned_lww_fold_fused(
+            df, key_cols=["k"], order_cols=["ts"], bucket_by="k",
+            num_buckets=2, splits=2, split_by="k", epoch_col="epoch",
+            write_dirs={0: str(tmp_path)},
+        )

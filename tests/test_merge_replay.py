@@ -438,11 +438,14 @@ def _snap_map(table, epoch, job):
     }
 
 
-def test_fused_replay_equals_per_epoch(spark, tmp_path):
+@pytest.mark.parametrize("num_buckets", [4, 16])
+def test_fused_replay_equals_per_epoch(spark, tmp_path, num_buckets):
     """Fused chunks must be observationally IDENTICAL to per-epoch
     replay: every intermediate snapshot (time travel), the final state,
     the lineage table, and the change feed built over the fused manifests
-    (which replace files at (bucket, split) granularity)."""
+    (which replace files at (bucket, split) granularity). 16 buckets make
+    64 (bucket, split) units, more than the fold has tasks, so each task
+    streams several units."""
     from go_tfdata_spark.operators.merge import table_changes_range
 
     changes = synthetic_changes(
@@ -450,9 +453,9 @@ def test_fused_replay_equals_per_epoch(spark, tmp_path):
         seed=13,
     )
     t1 = create_transcripts_table(
-        spark, str(tmp_path / "a"), TRANSCRIPTS_SCHEMA, num_buckets=4)
+        spark, str(tmp_path / "a"), TRANSCRIPTS_SCHEMA, num_buckets=num_buckets)
     t2 = create_transcripts_table(
-        spark, str(tmp_path / "b"), TRANSCRIPTS_SCHEMA, num_buckets=4)
+        spark, str(tmp_path / "b"), TRANSCRIPTS_SCHEMA, num_buckets=num_buckets)
     r1 = replay(t1, changes, job_id="j", fuse_epochs=1,
                 merge_strategy="aligned")
     r2 = replay(t2, changes, job_id="j", fuse_epochs=3,
@@ -474,6 +477,68 @@ def test_fused_replay_equals_per_epoch(spark, tmp_path):
         for r in table_changes_range(t2, "j", 0, 4).collect()
     }
     assert rows1 == rows2
+
+
+def test_fused_chunk_carries_untouched_units(spark, tmp_path, monkeypatch):
+    """Two fused chunks where the second touches only buckets 0 and 1:
+    every (bucket, split) unit without rows in an epoch keeps its exact
+    file path in that epoch's manifest, every unit with rows gets a new
+    file, and the fold runs min(units, 2 x defaultParallelism) tasks."""
+    from go_tfdata_spark.lake.table import bucket_expr, split_expr
+    from go_tfdata_spark.operators import arrow_fold
+
+    folds = []
+    fused = arrow_fold.aligned_lww_fold_fused
+
+    def capture(*args, **kwargs):
+        folds.append(fused(*args, **kwargs))
+        return folds[-1]
+
+    monkeypatch.setattr(arrow_fold, "aligned_lww_fold_fused", capture)
+    nb = 8
+    changes = synthetic_changes(
+        spark, n_events=3000, n_epochs=4, delete_frac=0.1, late_frac=0.2,
+        seed=37,
+    )
+    changes = changes.filter(
+        (F.col("epoch") < 2) | (bucket_expr("conv_id", nb) < 2))
+    table = create_transcripts_table(
+        spark, str(tmp_path / "t"), TRANSCRIPTS_SCHEMA, num_buckets=nb)
+    results = replay(table, changes, job_id="j", fuse_epochs=2,
+                     merge_strategy="aligned")  # chunks [0, 1], [2, 3]
+    assert [r.epoch for r in results] == [0, 1, 2, 3]
+    assert len(folds) == 2
+    units = nb * 4
+    for df in folds:
+        assert df.rdd.getNumPartitions() == min(
+            units, 2 * spark.sparkContext.defaultParallelism)
+
+    split_by = table.snapshot().split_by
+    touched = {}
+    for r in changes.select(
+        bucket_expr("conv_id", nb).alias("b"),
+        split_expr(split_by, 4).alias("s"), "epoch",
+    ).distinct().collect():
+        touched.setdefault(r["epoch"], set()).add((r["b"], r["s"]))
+    layouts = []
+    for r in results:
+        files = table.snapshot(r.version).files
+        layout = {(f["bucket"], f["split"]): f["path"] for f in files}
+        assert len(layout) == len(files), "one file per (bucket, split)"
+        layouts.append(layout)
+    assert touched[0] == set(layouts[0])
+    assert all(b < 2 for e in (2, 3) for b, _ in touched[e])
+    assert len(layouts[1]) > len(touched[2] | touched[3])
+    for e in range(1, 4):
+        prev, cur = layouts[e - 1], layouts[e]
+        assert set(cur) == set(prev) | touched[e]
+        for u, path in cur.items():
+            if u in touched[e]:
+                assert path != prev.get(u), (e, u)
+            else:
+                assert path == prev[u], (e, u)
+    oracle = sequential_apply(changes.toPandas(), PAYLOAD)
+    assert_final_state_equal(read_table(table), oracle)
 
 
 def test_fused_replay_resumes_mid_chunk(spark, tmp_path):
