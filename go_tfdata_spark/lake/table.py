@@ -532,10 +532,16 @@ class LakeTable:
                 m = self._next_manifest(s)
         raise CommitConflict(f"append_delta lost {max_retries} CAS races")
 
-    def _conform(self, df: DataFrame, schema: T.StructType) -> DataFrame:
+    def _conform(
+        self, df: DataFrame, schema: T.StructType, keep: tuple = ()
+    ) -> DataFrame:
         """Project df to the table schema: missing columns -> NULL (additive
-        evolution tolerance), extra columns rejected (must evolve first)."""
-        extra = [c for c in df.columns if c not in schema.fieldNames()]
+        evolution tolerance), extra columns rejected (must evolve first).
+        Columns named in `keep` (e.g. a fold's epoch column) pass through
+        after the table columns."""
+        extra = [
+            c for c in df.columns if c not in schema.fieldNames() and c not in keep
+        ]
         if extra:
             raise ValueError(
                 f"columns {extra} not in table schema; call update_schema() first"
@@ -546,7 +552,7 @@ class LakeTable:
                 cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
             else:
                 cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return df.select(*cols)
+        return df.select(*cols, *keep)
 
     # ------------------------------------------------------ schema evolution
     def update_schema(self, new_fields: list[T.StructField], summary: dict | None = None) -> Manifest:
@@ -586,70 +592,18 @@ class LakeTable:
         raise CommitConflict("update_schema lost 20 CAS races")
 
     # ----------------------------------------------------------------- merge
-    def merge(
-        self,
-        upserts: DataFrame,
-        deletes: DataFrame | None,
-        key_cols: list[str],
-        summary: dict | None = None,
-    ) -> Manifest:
-        """MERGE INTO this table USING (upserts ∪ deletes) ON key_cols.
-
-        Semantics (one source row per key — callers LWW-fold first):
-          WHEN MATCHED AND source is delete THEN DELETE
-          WHEN MATCHED THEN UPDATE SET * (full-row replace)
-          WHEN NOT MATCHED AND source is not delete THEN INSERT *
-
-        Physical plan (copy-on-write, bucket-pruned):
-          1. affected buckets = distinct bucket(key) over the source —
-             a tiny aggregate (≤ num_buckets values) collected to the driver;
-          2. scan ONLY those buckets of the target (file-level pruning);
-          3. anti-join out rows whose key appears in the source (the source
-             key set is broadcast when small; at scale this is a shuffled
-             hash join on the key — the single unavoidable shuffle);
-          4. union surviving rows with the upserts, rewrite those buckets;
-          5. new manifest = untouched files + rewritten files, CAS-published.
-        """
-        m = self._next_manifest({"operation": "merge", **(summary or {})})
-        src = upserts.select(*[F.col(c) for c in key_cols]).unionByName(
-            deletes.select(*[F.col(c) for c in key_cols])
-        ) if deletes is not None else upserts.select(*key_cols)
-
-        bexpr = bucket_expr(m.bucket_by, m.num_buckets)
-        affected = [
-            r[0]
-            for r in src.select(bexpr.alias("b")).distinct().collect()
-        ]
-        if not affected:
-            return self.snapshot()  # empty batch: no-op, no commit
-
-        target = self.read_buckets(affected)
-        # Hint only if the estimated key-set size fits the broadcast budget —
-        # an explicit hint is honored unconditionally (AQE does NOT demote
-        # it), so an unbounded hint could OOM the driver at scale.
-        changed_keys = gate_broadcast(src.distinct())
-        kept = target.join(changed_keys, on=key_cols, how="left_anti")
-        new_rows = kept.unionByName(self._conform(upserts, m.schema))
-
-        untouched = [f for f in m.files if f.get("bucket") not in set(affected)]
-        rewritten = self._write_data(new_rows, m)
-        m.files = untouched + rewritten
-        m.summary["affected_buckets"] = sorted(affected)
-        self._publish(m)
-        return m
-
     def merge_lww(
         self,
         source: DataFrame,
         key_cols: list[str],
         order_cols: list[str],
         summary: dict | None = None,
-        strategy: str = "broadcast",
         affected: list[int] | None = None,
         source_rows: int | None = None,
     ) -> Manifest:
-        """Order-conditional MERGE: per key, keep whichever of {current target
-        row, source row} has the greater (order_cols) tuple.
+        """Order-conditional MERGE for SPARSE batches: per key, keep whichever
+        of {current target row, source row} has the greater (order_cols)
+        tuple.
 
         This is ``MERGE INTO t USING s ON keys WHEN MATCHED AND s.order >
         t.order THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`` — the
@@ -663,20 +617,14 @@ class LakeTable:
         user-facing reads filter them (see operators/merge.py). Compaction
         may purge tombstones older than the replay watermark.
 
-        Physical strategies (both prune the scan to the buckets that contain
-        source keys; new manifest = untouched files + rewrites, CAS-published):
-
-        - `strategy="broadcast"` — for SPARSE batches (keys << table, the
-          normal CDC shape): target rows whose key is NOT in the source pass
-          through via a broadcast anti join (no shuffle; read from per-bucket
-          files, written back shuffle-free via `presharded`); only colliding
-          rows ∪ source go through the LWW fold, so shuffle volume is
-          O(change batch), not O(table). Costs one driver-side broadcast
-          build per write job — wasted work when most keys collide.
-        - `strategy="shuffle"` — for DENSE batches (keys ~ table): one
-          union + LWW fold over (pruned target ∪ source); a single hash
-          aggregation shuffle of the affected buckets, no broadcast, no
-          driver round-trips beyond bucket discovery.
+        Physical plan (broadcast passthrough): the scan is pruned to the
+        buckets that contain source keys; target rows whose key is NOT in
+        the source pass through via a broadcast anti join (no shuffle; read
+        from per-bucket files, written back shuffle-free via `presharded`);
+        only colliding rows ∪ source go through the LWW fold, so shuffle
+        volume is O(change batch), not O(table). New manifest = untouched
+        files + rewrites, CAS-published. Dense batches (keys ~ table) take
+        `merge_aligned_fused` instead, which never builds a broadcast.
         """
         from go_tfdata_spark.operators.lww import lww_latest
 
@@ -691,164 +639,77 @@ class LakeTable:
 
         target = self.read_buckets(affected)
         untouched = [f for f in m.files if f.get("bucket") not in set(affected)]
-
-        if strategy == "shuffle":
-            merged = lww_latest(
-                target.unionByName(src), key_cols=key_cols, order_cols=order_cols
-            )
-            m.files = untouched + self._write_data(merged, m)
-        else:
-            # Size-gated hint (see gate_broadcast): callers that already know
-            # the folded-batch key count pass it as `source_rows` for an
-            # exact byte estimate; otherwise Catalyst stats decide. Oversized
-            # key sets run unhinted — the planner (incl. AQE) picks the join.
-            keys = gate_broadcast(src.select(*key_cols).distinct(), source_rows)
-            passthrough = target.join(keys, on=key_cols, how="left_anti")
-            colliding = target.join(keys, on=key_cols, how="left_semi")
-            winners = lww_latest(
-                colliding.unionByName(src), key_cols=key_cols, order_cols=order_cols
-            )
-            m.files = (
-                untouched
-                + self._write_data(passthrough, m, presharded=True)
-                + self._write_data(winners, m)
-            )
+        # Size-gated hint (see gate_broadcast): callers that already know
+        # the folded-batch key count pass it as `source_rows` for an exact
+        # byte estimate; otherwise Catalyst stats decide. Oversized key sets
+        # run unhinted — the planner (incl. AQE) picks the join.
+        keys = gate_broadcast(src.select(*key_cols).distinct(), source_rows)
+        passthrough = target.join(keys, on=key_cols, how="left_anti")
+        colliding = target.join(keys, on=key_cols, how="left_semi")
+        winners = lww_latest(
+            colliding.unionByName(src), key_cols=key_cols, order_cols=order_cols
+        )
+        m.files = (
+            untouched
+            + self._write_data(passthrough, m, presharded=True)
+            + self._write_data(winners, m)
+        )
         m.summary["affected_buckets"] = sorted(affected)
-        m.summary["merge_strategy"] = strategy
+        m.summary["merge_strategy"] = "broadcast"
         self._publish(m)
         return m
 
-    def merge_aligned(
+    def _fold_write(
         self,
-        source: DataFrame,
+        m: Manifest,
+        rows: DataFrame,
+        epoch_col: str,
+        epochs: list[int],
         key_cols: list[str],
         order_cols: list[str],
-        summary: dict | None = None,
-        affected: list[int] | None = None,
+        target_files: dict[tuple[int, int], list[str]] | None = None,
         lineage_acc=None,
-        finalize=None,
-    ) -> Manifest:
-        """Dense-batch COW merge on the write layout (the Arrow zipper path).
+        drop_deleted: bool = False,
+    ) -> dict[int, list[dict]]:
+        """Fold `rows` (physical-shape rows plus `epoch_col`) onto m's
+        (bucket, split) layout with the Arrow fold
+        (operators/arrow_fold.aligned_lww_fold_fused) and return the
+        manifest entries of the files it wrote, per epoch, in path order.
+        Publishes nothing: the fold tasks write the files in-worker and the
+        caller decides which manifests carry them. Rows are conformed to
+        m's schema first (missing columns NULL, extra columns refused)."""
+        from go_tfdata_spark.operators.arrow_fold import aligned_lww_fold_fused
 
-        ``union(affected target rows, source rows)`` is repartitioned
-        straight to the table's (bucket, split) write layout and folded
-        partition-locally by an Arrow winner-per-key kernel
-        (operators/arrow_fold.py) — ONE payload shuffle per epoch, no
-        sort-based wide-string aggregate, no JSON round-trip, and the output
-        is presharded so the write adds no further exchange. Source rows
-        must already be in physical-table shape (tombstones as rows); the
-        fold resolves target-vs-source and late events in the same pass.
-
-        Use for batches whose key set is comparable to the affected-bucket
-        row count; `merge_lww(strategy='broadcast')` remains the sparse
-        path (it never shuffles the passthrough rows at all).
-
-        With `lineage_acc` the fold also reports per-(src_part, deleted)
-        batch-winner counts through the accumulator (see aligned_lww_fold);
-        `finalize(manifest)` runs after the data is written but BEFORE the
-        atomic publish, letting the caller fold accumulator-derived lineage
-        into the committed summary without breaking commit atomicity.
-
-        TARGET-LOCAL fast path: every file `_write_data` produces holds
-        exactly one (bucket, split) — the fold's own partitioning unit —
-        and the manifest records which. So instead of scanning + shuffling
-        the carried target rows through the JVM each epoch (measured: the
-        dominant non-scaling cost of a steady-state replay, 8->32 speedup
-        1.12x on the carried-target epoch), each fold task reads its OWN
-        partition's target files straight from storage inside the Python
-        worker; only the change batch ever shuffles. Falls back to the
-        union path for manifests predating the split record."""
-        import sys as _sys
-        import time as _time
-
-        from go_tfdata_spark.operators.arrow_fold import (
-            aligned_lww_fold,
-            fold_partition_map,
-        )
-
-        _timing = os.environ.get("SPARK_GRAFT_TIMING") == "1"
-        _t0 = _time.time()
-        m = self._next_manifest({"operation": "merge", **(summary or {})})
-        src = self._conform(source, m.schema)
-        if affected is None:
-            bexpr = bucket_expr(m.bucket_by, m.num_buckets)
-            affected = [r[0] for r in src.select(bexpr.alias("b")).distinct().collect()]
-        if not affected:
-            return self.snapshot()
-        aset = set(affected)
-        untouched = [f for f in m.files if f.get("bucket") not in aset]
-        tentries = [f for f in m.files if f.get("bucket") in aset]
-        splits = _WRITE_SPLITS_PER_BUCKET
-        local_kwargs: dict = {}
-        flag = None
-        if all("split" in f for f in tentries):
-            n_parts = m.num_buckets * splits
-            pmap = fold_partition_map(self.spark, n_parts)
-            tfiles: dict[int, list] = {}
-            for f in tentries:
-                p = pmap[f["bucket"] * splits + f["split"]]
-                tfiles.setdefault(p, []).append(
-                    (os.path.join(self.path, f["path"]), f["bucket"], f["split"])
-                )
-            local_kwargs = {
-                "target_files": tfiles,
-                "stream_batch": lineage_acc is not None,
-            }
-            fold_input = src
-        else:
-            target = self.read_buckets(affected, resolve=False)
-            if lineage_acc is not None:
-                flag = "_fold_src"
-                target = target.withColumn(flag, F.lit(False))
-                src = src.withColumn(flag, F.lit(True))
-            fold_input = target.unionByName(src)
-        # Write-in-fold: the fold tasks write their winner rows as the
-        # table's (bucket, split) files directly from the Python workers
-        # and return only manifest entries — the winner payload never
-        # crosses back into the JVM (see aligned_lww_fold).
-        commit_dir = os.path.join(_DATA_DIR, uuid.uuid4().hex)
-        abs_dir = os.path.join(self.path, commit_dir)
-        os.makedirs(abs_dir, exist_ok=True)
-        if _timing:
-            print(f"TIMING merge_prologue {_time.time() - _t0:.2f}s",
-                  file=_sys.stderr, flush=True)
-            _t0 = _time.time()
-        merged = aligned_lww_fold(
-            fold_input,
+        write_dirs: dict[int, str] = {}
+        for e in epochs:
+            d = os.path.join(self.path, _DATA_DIR, uuid.uuid4().hex)
+            os.makedirs(d, exist_ok=True)
+            write_dirs[int(e)] = d
+        entries = aligned_lww_fold_fused(
+            self._conform(rows, m.schema, keep=(epoch_col,)),
             key_cols=key_cols,
             order_cols=order_cols,
             bucket_by=m.bucket_by,
             num_buckets=m.num_buckets,
-            splits=splits,
+            splits=_WRITE_SPLITS_PER_BUCKET,
             split_by=m.split_by or m.bucket_by,
-            batch_flag_col=flag,
+            epoch_col=epoch_col,
+            write_dirs=write_dirs,
+            target_files=target_files,
             lineage_acc=lineage_acc,
-            write_dir=abs_dir,
             parquet_codec=self.spark.conf.get(
                 "spark.sql.parquet.compression.codec", "snappy"
             ),
-            **local_kwargs,
-        )
-        written = sorted(
-            (os.path.relpath(r["path"], self.path), int(r["bucket"]), int(r["split"]))
-            for r in merged.collect()
-        )
-        if _timing:
-            print(f"TIMING merge_fold_job {_time.time() - _t0:.2f}s",
-                  file=_sys.stderr, flush=True)
-            _t0 = _time.time()
-        m.files = untouched + [
-            {"path": p, "bucket": b, "split": s} for p, b, s in written
-        ]
-        m.summary["affected_buckets"] = sorted(affected)
-        m.summary["merge_strategy"] = "aligned"
-        if finalize is not None:
-            finalize(m)
-        self._publish(m)
-        if _timing:
-            print(f"TIMING merge_publish {_time.time() - _t0:.2f}s",
-                  file=_sys.stderr, flush=True)
-        return m
+            drop_deleted=drop_deleted,
+        ).collect()
+        written: dict[int, list[dict]] = {int(e): [] for e in epochs}
+        for r in sorted(entries, key=lambda r: r["path"]):
+            written[int(r["epoch"])].append({
+                "path": os.path.relpath(r["path"], self.path),
+                "bucket": int(r["bucket"]),
+                "split": int(r["split"]),
+            })
+        return written
 
     def merge_aligned_fused(
         self,
@@ -861,42 +722,52 @@ class LakeTable:
         lineage_acc=None,
         finalize_by_epoch=None,
     ) -> list[Manifest]:
-        """FUSED dense-batch COW merge for a chunk of consecutive epochs:
-        ONE scan + ONE shuffle + ONE fold job for the whole chunk, then one
-        ledger-carrying manifest commit PER EPOCH — the exactly-once
-        contract is unchanged (each epoch's (job_id, epoch) entry still
-        rides its own atomic commit; a crash mid-chunk commits a prefix and
-        the ledger re-runs only the rest).
+        """The dense copy-on-write merge, for a chunk of consecutive epochs
+        (one epoch is a chunk of one): ONE scan + ONE shuffle + ONE fold job
+        for the whole chunk, then one ledger-carrying manifest commit PER
+        EPOCH — the exactly-once contract is per epoch (each epoch's
+        (job_id, epoch) entry rides its own atomic commit; a crash
+        mid-chunk commits a prefix and the ledger re-runs only the rest).
 
-        Why: the per-epoch aligned merge re-reads the full carried winner
+        `source` is physical-shape rows (tombstones as rows, see
+        operators/merge.physical_rows) plus `epoch_col`; `summaries` keys
+        the chunk's epochs. The fold resolves carried target rows, the
+        batch and late events in one pass, on the table's write layout.
+
+        Why chunks: a per-epoch merge re-reads the full carried winner
         table from parquet every epoch. Steady-state catch-up over E epochs
-        costs E table re-reads; fused chunks cost one re-read per chunk —
-        the difference between O(E·table) and O(E/chunk·table) read volume
-        on a 10^4-epoch backfill.
+        costs E table re-reads; chunks cost one re-read per chunk — the
+        difference between O(E·table) and O(E/chunk·table) read volume on a
+        10^4-epoch backfill.
 
         Manifests are built at (bucket, split) granularity: epoch e's
         manifest replaces exactly the (bucket, split) files the fold wrote
         for e and carries every other file forward — an epoch that touched
-        3 of 128 write units commits 3 new files (the per-epoch path
-        rewrites every split of every affected bucket).
+        3 of 128 write units commits 3 new files.
 
         The fold runs min(units, 2 × defaultParallelism) Python tasks, not
         one per (bucket, split) unit: each task streams its units in
         (unit, epoch) order, reading a unit's carried files when its first
-        row arrives and holding one unit's state plus one epoch's rows at
-        a time (see aligned_lww_fold_fused). Carried files are handed over
-        keyed by (bucket, split), so no driver-side partition map is
-        needed.
+        row arrives and holding one unit's state plus a bounded buffer of
+        one epoch's rows at a time (see aligned_lww_fold_fused). Carried
+        files are handed over keyed by (bucket, split).
 
-        Single-writer path (batch replay); a concurrent foreign commit
-        surfaces as CommitConflict from the sequential publish loop —
-        the caller re-runs and the ledger skips the committed prefix.
-        Requires the full-(bucket, split) manifest layout; callers gate on
-        it (replay() falls back to per-epoch merges for legacy tables)."""
-        from go_tfdata_spark.operators.arrow_fold import aligned_lww_fold_fused
+        `affected_by_epoch` names each epoch's buckets (None: unknown); it
+        only prunes the carried-file hand-over and the legacy upgrade below.
+        Files written before manifests recorded their split have no
+        (bucket, split) owner: the affected buckets holding any are
+        compacted once, in a commit of their own, before the fold.
 
+        With `lineage_acc` the fold reports each epoch's batch-winner
+        counts through the accumulator; `finalize_by_epoch(e, manifest)`
+        runs after the data is written but BEFORE that epoch's atomic
+        publish, so accumulator-derived lineage lands in the commit.
+
+        Single-writer path (batch replay, one streaming epoch); a
+        concurrent foreign commit surfaces as CommitConflict from the
+        sequential publish loop — the caller re-runs and the ledger skips
+        the committed prefix."""
         epochs = sorted(int(e) for e in summaries)
-        base = self.snapshot()
         chunk_affected: set[int] | None = set()
         for e in epochs:
             a = affected_by_epoch.get(e)
@@ -904,66 +775,27 @@ class LakeTable:
                 chunk_affected = None
                 break
             chunk_affected.update(a)
-        extra = [
-            c for c in source.columns
-            if c != epoch_col and c not in base.schema.fieldNames()
-        ]
-        if extra:
-            raise ValueError(
-                f"columns {extra} not in table schema; call update_schema() first"
-            )
-        src = source.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in source.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in base.schema.fields
-            ],
-            F.col(epoch_col).cast("long").alias(epoch_col),
-        )
-        tentries = [
-            f for f in base.files
-            if chunk_affected is None or f.get("bucket") in chunk_affected
-        ]
-        if not all("split" in f for f in tentries):
-            raise ValueError(
-                "merge_aligned_fused requires the (bucket, split) manifest "
-                "layout; replay() falls back to per-epoch merges"
-            )
-        splits = _WRITE_SPLITS_PER_BUCKET
+
+        def targets(files):
+            return [
+                f for f in files
+                if chunk_affected is None or f.get("bucket") in chunk_affected
+            ]
+
+        base = self.snapshot()
+        legacy = {f.get("bucket") for f in targets(base.files) if "split" not in f}
+        if legacy:
+            self.compact(buckets=sorted(legacy))
+            base = self.snapshot()
         tfiles: dict[tuple[int, int], list[str]] = {}
-        for f in tentries:
+        for f in targets(base.files):
             tfiles.setdefault((f["bucket"], f["split"]), []).append(
                 os.path.join(self.path, f["path"])
             )
-        write_dirs: dict[int, str] = {}
-        for e in epochs:
-            d = os.path.join(self.path, _DATA_DIR, uuid.uuid4().hex)
-            os.makedirs(d, exist_ok=True)
-            write_dirs[e] = d
-        entries = aligned_lww_fold_fused(
-            src,
-            key_cols=key_cols,
-            order_cols=order_cols,
-            bucket_by=base.bucket_by,
-            num_buckets=base.num_buckets,
-            splits=splits,
-            split_by=base.split_by or base.bucket_by,
-            epoch_col=epoch_col,
-            write_dirs=write_dirs,
-            target_files=tfiles,
-            lineage_acc=lineage_acc,
-            parquet_codec=self.spark.conf.get(
-                "spark.sql.parquet.compression.codec", "snappy"
-            ),
-        ).collect()
-        written: dict[int, list[dict]] = {e: [] for e in epochs}
-        for r in sorted(entries, key=lambda r: r["path"]):
-            written[int(r["epoch"])].append({
-                "path": os.path.relpath(r["path"], self.path),
-                "bucket": int(r["bucket"]),
-                "split": int(r["split"]),
-            })
+        written = self._fold_write(
+            base, source, epoch_col, epochs, key_cols, order_cols,
+            target_files=tfiles, lineage_acc=lineage_acc,
+        )
         out: list[Manifest] = []
         prev = base
         files = list(base.files)
@@ -974,8 +806,8 @@ class LakeTable:
                 if (f.get("bucket"), f.get("split")) not in wkeys
             ] + written[e]
             s = {"operation": "merge", **summaries[e]}
-            s["affected_buckets"] = sorted(affected_by_epoch.get(e) or [])
-            s["merge_strategy"] = "aligned-fused"
+            s["affected_buckets"] = sorted({b for b, _ in wkeys})
+            s["merge_strategy"] = "aligned"
             m = Manifest(
                 version=prev.version + 1,
                 parent=prev.version,
@@ -1002,15 +834,26 @@ class LakeTable:
         buckets: list[int] | None = None,
         max_files_per_bucket: int = 1,
         purge_tombstones: bool = False,
-        deleted_col: str = "_deleted",
         summary: dict | None = None,
     ) -> Manifest:
         """Maintenance rewrite: coalesce each bucket's files and optionally
-        purge retained tombstones (safe once no change older than the
-        replay watermark can still arrive). No semantic change to live
-        rows; snapshot isolation means readers of older versions are
+        purge retained `_deleted` tombstones (safe once no change older
+        than the replay watermark can still arrive). No semantic change to
+        live rows; snapshot isolation means readers of older versions are
         unaffected. Incremental-merge COW accumulates files per bucket;
-        compaction restores the read-amplification floor."""
+        compaction restores the read-amplification floor.
+
+        A bucket is rewritten when it holds more than `max_files_per_bucket`
+        files, MOR delta files, or files without a recorded split (written
+        before manifests recorded one — the rewrite records it, which is
+        how legacy buckets reach the layout the dense merge needs), and
+        always under `purge_tombstones`.
+
+        Keyed tables resolve with the dense Arrow fold: the buckets' rows
+        are fed as one epoch onto the write layout, files written in the
+        fold workers, and the purge drops tombstone WINNERS after
+        resolution (dropping tombstone rows first would let an older live
+        version win back). Unkeyed tables are rewritten as they read."""
         m = self._next_manifest({"operation": "compact", **(summary or {})})
         by_bucket: dict[int, list[dict]] = {}
         for f in m.files:
@@ -1022,52 +865,24 @@ class LakeTable:
             and (
                 len(fs) > max_files_per_bucket
                 or purge_tombstones
-                or any(f.get("delta") for f in fs)  # resolve MOR deltas
+                or any(f.get("delta") or "split" not in f for f in fs)
             )
         ]
         if not todo:
             return self.snapshot()
         kept = [f for f in m.files if f.get("bucket") not in set(todo)]
+        purge = purge_tombstones and "_deleted" in m.schema.fieldNames()
         if m.key_cols and m.order_cols:
-            # Keyed table: resolve (MOR deltas + duplicate versions) with the
-            # bucket-aligned Arrow fold — one shuffle straight onto the write
-            # layout, files written IN the fold workers (same write-in-fold
-            # contract as merges: attempt-unique files, manifest entries as
-            # the job output, zero post-shuffle process crossings).
-            # Tombstone purge happens inside the fold AFTER resolution
-            # (dropping tombstone rows first would let an older live
-            # version win back).
-            from go_tfdata_spark.operators.arrow_fold import aligned_lww_fold
-
-            commit_dir = os.path.join(_DATA_DIR, uuid.uuid4().hex)
-            abs_dir = os.path.join(self.path, commit_dir)
-            os.makedirs(abs_dir, exist_ok=True)
-            merged = aligned_lww_fold(
-                self.read_buckets(todo, resolve=False),
-                key_cols=m.key_cols,
-                order_cols=m.order_cols,
-                bucket_by=m.bucket_by,
-                num_buckets=m.num_buckets,
-                splits=_WRITE_SPLITS_PER_BUCKET,
-                split_by=m.split_by or m.bucket_by,
-                write_dir=abs_dir,
-                parquet_codec=self.spark.conf.get(
-                    "spark.sql.parquet.compression.codec", "snappy"
-                ),
-                drop_deleted=bool(
-                    purge_tombstones and deleted_col in m.schema.fieldNames()
-                ),
-                deleted_col=deleted_col,
+            rows = self.read_buckets(todo, resolve=False)
+            written = self._fold_write(
+                m, rows.withColumn("_epoch", F.lit(0)), "_epoch", [0],
+                m.key_cols, m.order_cols, drop_deleted=purge,
             )
-            m.files = kept + [
-                {"path": os.path.relpath(r["path"], self.path),
-                 "bucket": int(r["bucket"]), "split": int(r["split"])}
-                for r in sorted(merged.collect(), key=lambda r: r["path"])
-            ]
+            m.files = kept + written[0]
         else:
             df = self.read_buckets(todo)
-            if purge_tombstones and deleted_col in df.columns:
-                df = df.filter(~F.coalesce(F.col(deleted_col), F.lit(False)))
+            if purge:
+                df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
             m.files = kept + self._write_data(df, m)
         m.summary["compacted_buckets"] = sorted(todo)
         self._publish(m)

@@ -31,6 +31,10 @@ from go_tfdata_spark.model import (
     LINEAGE_SCHEMA,
     LWW_ORDER_COLUMNS,
 )
+from go_tfdata_spark.operators.arrow_fold import (
+    fold_lineage_counts_epoch,
+    lineage_accumulator,
+)
 from go_tfdata_spark.operators.lww import lww_latest
 
 # Engine-managed metadata columns on the physical table. `_deleted` marks a
@@ -519,9 +523,10 @@ def precompute_epoch_stats(
 
     This is ONE raw map-side-combining pass — no key fold. The per-key
     winner-op counts (rows_upserted/rows_deleted) are NOT computed here:
-    they ride the merge fold itself via an accumulator (aligned_lww_fold's
-    lineage piggyback), which removed a second full scan+shuffle of the
-    change log per replay (measured ~30% of an 8-core replay's wall).
+    they ride the merge fold itself via an accumulator (the lineage
+    piggyback of aligned_lww_fold_fused), which removed a second full
+    scan+shuffle of the change log per replay (measured ~30% of an 8-core
+    replay's wall).
     Lineage rows leave upserted/deleted as None for apply_changes to fill.
     """
     from go_tfdata_spark.lake.table import bucket_expr
@@ -557,6 +562,22 @@ def precompute_epoch_stats(
     for s in stats.values():
         s["affected"] = sorted(s["affected"])
     return stats
+
+
+# Merge strategies apply_changes and replay accept ("auto" picks one of the
+# two copy-on-write ones per epoch).
+MERGE_STRATEGIES = ("auto", "broadcast", "aligned", "mor")
+
+# Epochs per fused chunk in replay() when `fuse_epochs` is not given.
+_FUSE_EPOCHS = 8
+
+
+def _check_strategy(merge_strategy: str) -> None:
+    if merge_strategy not in MERGE_STRATEGIES:
+        raise ValueError(
+            f"unknown merge_strategy {merge_strategy!r}; "
+            f"expected one of {MERGE_STRATEGIES}"
+        )
 
 
 def _resolve_strategy(merge_strategy: str, batch_events: int | None) -> str:
@@ -600,6 +621,23 @@ def apply_changes(
     hot-key salting) -> tombstone fold -> order-conditional MERGE, with
     lineage embedded in the atomic commit.
 
+    `merge_strategy` is one of MERGE_STRATEGIES; any other value raises
+    ValueError before any work. The three physical paths:
+
+    - "broadcast" (sparse batches): the batch is folded first
+      (`fold_changes`, salted by `salt_buckets`) and merged by
+      `LakeTable.merge_lww`'s broadcast passthrough;
+    - "aligned" (dense batches): physical-shape rows fold straight onto
+      the write layout with the carried target rows, as a one-epoch chunk
+      of `LakeTable.merge_aligned_fused` — the same fold a fused replay
+      chunk runs;
+    - "mor" (merge-on-read): the same fold with no carried files writes the
+      batch winners as delta files, published by `append_delta`.
+
+    "auto" picks broadcast or aligned by the batch's size (see
+    `_resolve_strategy`). On the two fold paths the lineage winner-op
+    counts ride the fold through an accumulator.
+
     `auto_compact_deltas` (opt-in, MOR only): after the delta commit, any
     bucket holding >= that many delta FILES (each MOR epoch adds up to
     `_WRITE_SPLITS_PER_BUCKET` per affected bucket) is compacted, bounding
@@ -608,6 +646,7 @@ def apply_changes(
     the resolve over all of them. Compaction here is advisory: losing a CAS
     race to a concurrent epoch just postpones it to the next trigger.
     """
+    _check_strategy(merge_strategy)
     validate_changes(changes, key_cols, order_cols)
     if table.is_committed(job_id, epoch):
         return ApplyResult(job_id, epoch, skipped=True, version=None, lineage=[])
@@ -629,118 +668,84 @@ def apply_changes(
         sum(r["offsets_applied"] for r in lineage) if lineage else None
     )
     strategy = _resolve_strategy(merge_strategy, batch_events)
-    # Winner-op counts (rows_upserted/deleted): for the dense strategies
-    # they ride the merge fold via an accumulator (no extra scan/shuffle);
-    # the sparse strategies run the cheap slim fold up front.
+    # Winner-op counts (rows_upserted/deleted): on the fold paths they ride
+    # the merge fold via an accumulator (no extra scan/shuffle); the sparse
+    # path runs the cheap slim fold up front.
     needs_counts = bool(lineage) and any(
         ln["rows_upserted"] is None for ln in lineage
     )
     acc = None
-    finalize = None
     if needs_counts and strategy in ("aligned", "mor"):
-        from go_tfdata_spark.operators.arrow_fold import (
-            fold_lineage_counts,
-            lineage_accumulator,
-        )
-
         acc = lineage_accumulator(table.spark)
-
-        def finalize(m, _acc=acc, _lineage=lineage):  # noqa: ANN001
-            _fill_lineage(_lineage, fold_lineage_counts(_acc.value))
-
     elif needs_counts:
         _fill_lineage(lineage, _lineage_counts(changes, key_cols, order_cols))
+
+    def finalize(m):  # noqa: ANN001
+        if acc is not None:
+            _fill_lineage(lineage, fold_lineage_counts_epoch(acc.value, epoch))
+
     phys_order = ["ts", "_lsn", "_src_part"]
-    if strategy == "aligned":
-        # No separate batch fold: physical-shape rows (tombstones pre-nulled
-        # — commutes with the fold, see physical_rows) union the affected
-        # target rows and fold ONCE on the write layout.
-        m = table.merge_aligned(
-            physical_rows(changes, key_cols),
-            key_cols=key_cols,
-            order_cols=phys_order,
-            summary=summary,
-            affected=affected,
-            lineage_acc=acc,
-            finalize=finalize,
-        )
-    elif strategy == "mor":
-        # merge-on-read: append the folded batch as delta files (write
-        # O(batch), no target scan); reads/compaction resolve LWW. The batch
-        # fold runs on the write layout (Arrow kernel) so the delta write is
-        # presharded — one payload shuffle, like the aligned COW path. Every
-        # fold input row is a batch row, so lineage counts come straight off
-        # the winner table (`all_batch`) — no second slim fold per task.
-        import os as _os
-        import uuid as _uuid
-
-        from go_tfdata_spark.lake.table import _DATA_DIR, _WRITE_SPLITS_PER_BUCKET
-        from go_tfdata_spark.operators.arrow_fold import aligned_lww_fold
-
-        snap = table.snapshot()
-        # write-in-fold (see aligned_lww_fold): the fold tasks write the
-        # delta files themselves and yield manifest entries; append_delta
-        # then only publishes the manifest (CAS retries republish the SAME
-        # files — no data rewrite, identical zombie/orphan contract)
-        commit_dir = _os.path.join(_DATA_DIR, _uuid.uuid4().hex)
-        abs_dir = _os.path.join(table.path, commit_dir)
-        _os.makedirs(abs_dir, exist_ok=True)
-        folded = aligned_lww_fold(
-            physical_rows(changes, key_cols),
-            key_cols=key_cols,
-            order_cols=phys_order,
-            bucket_by=snap.bucket_by,
-            num_buckets=snap.num_buckets,
-            splits=_WRITE_SPLITS_PER_BUCKET,
-            split_by=snap.split_by or snap.bucket_by,
-            lineage_acc=acc,
-            all_batch=acc is not None,
-            write_dir=abs_dir,
-            parquet_codec=table.spark.conf.get(
-                "spark.sql.parquet.compression.codec", "snappy"
-            ),
-        )
-        entries = [
-            {
-                "path": _os.path.relpath(r["path"], table.path),
-                "bucket": int(r["bucket"]),
-                "split": int(r["split"]),
-                "delta": True,
-            }
-            for r in sorted(folded.collect(), key=lambda r: r["path"])
-        ]
-        m = table.append_delta(None, summary=summary, finalize=finalize,
-                               entries=entries)
-        if auto_compact_deltas is not None:
-            from go_tfdata_spark.lake.table import CommitConflict
-
-            per_bucket: dict = {}
-            for f in m.files:
-                if f.get("delta"):
-                    b = f.get("bucket")
-                    per_bucket[b] = per_bucket.get(b, 0) + 1
-            todo = [b for b, n in per_bucket.items() if n >= auto_compact_deltas]
-            if todo:
-                try:
-                    table.compact(buckets=todo)
-                except CommitConflict:
-                    pass  # a concurrent epoch won the version; retrigger later
-    else:
-        # broadcast / shuffle COW paths take the pre-folded batch. The fold
-        # output feeds bucket discovery and the merge write; deliberately
-        # NOT persisted: caching wide text rows deserialized costs ~10x the
-        # fold itself (object+GC churn) and Catalyst column-prunes the
-        # recomputations.
+    if strategy == "broadcast":
+        # The fold output feeds bucket discovery and the merge write;
+        # deliberately NOT persisted: caching wide text rows deserialized
+        # costs ~10x the fold itself (object+GC churn) and Catalyst
+        # column-prunes the recomputations.
         folded = fold_changes(changes, key_cols, order_cols, salt_buckets)
         m = table.merge_lww(
             folded,
             key_cols=key_cols,
             order_cols=phys_order,
             summary=summary,
-            strategy=strategy,
             affected=affected,
             source_rows=batch_events,
         )
+        return ApplyResult(job_id, epoch, skipped=False, version=m.version,
+                           lineage=lineage)
+    # No separate batch fold on the fold paths: physical-shape rows
+    # (tombstones pre-nulled — commutes with the fold, see physical_rows)
+    # fold once on the write layout, as a one-epoch chunk.
+    rows = physical_rows(changes, key_cols).withColumn(
+        "epoch", F.lit(int(epoch))
+    )
+    if strategy == "aligned":
+        [m] = table.merge_aligned_fused(
+            rows,
+            epoch_col="epoch",
+            summaries={int(epoch): summary},
+            key_cols=key_cols,
+            order_cols=phys_order,
+            affected_by_epoch={int(epoch): affected},
+            lineage_acc=acc,
+            finalize_by_epoch=lambda e, m: finalize(m),
+        )
+        return ApplyResult(job_id, epoch, skipped=False, version=m.version,
+                           lineage=lineage)
+    # merge-on-read: the fold writes the batch winners as delta files (write
+    # O(batch), no target scan); reads/compaction resolve LWW. append_delta
+    # only publishes the manifest (CAS retries republish the SAME files — no
+    # data rewrite, identical zombie/orphan contract).
+    written = table._fold_write(
+        table.snapshot(), rows, "epoch", [int(epoch)], key_cols, phys_order,
+        lineage_acc=acc,
+    )
+    m = table.append_delta(
+        None, summary=summary, finalize=finalize,
+        entries=[dict(f, delta=True) for f in written[int(epoch)]],
+    )
+    if auto_compact_deltas is not None:
+        from go_tfdata_spark.lake.table import CommitConflict
+
+        per_bucket: dict = {}
+        for f in m.files:
+            if f.get("delta"):
+                b = f.get("bucket")
+                per_bucket[b] = per_bucket.get(b, 0) + 1
+        todo = [b for b, n in per_bucket.items() if n >= auto_compact_deltas]
+        if todo:
+            try:
+                table.compact(buckets=todo)
+            except CommitConflict:
+                pass  # a concurrent epoch won the version; retrigger later
     return ApplyResult(job_id, epoch, skipped=False, version=m.version, lineage=lineage)
 
 
@@ -787,11 +792,6 @@ def apply_changes_fused(
     acc = None
     finalize_by_epoch = None
     if needs_counts:
-        from go_tfdata_spark.operators.arrow_fold import (
-            fold_lineage_counts_epoch,
-            lineage_accumulator,
-        )
-
         acc = lineage_accumulator(table.spark)
 
         def finalize_by_epoch(e, m, _acc=acc):  # noqa: ANN001
@@ -839,21 +839,24 @@ def replay(
     up-front job (`precompute_epoch_stats`); each epoch then costs exactly
     one merge-write job plus a manifest commit.
 
-    FUSED chunks (`fuse_epochs`, default $SPARK_GRAFT_FUSE_EPOCHS or 8):
-    runs of consecutive uncommitted DENSE epochs apply as one fold job per
-    chunk (`apply_changes_fused`) — one scan + one shuffle + one carried-
-    state read per chunk instead of per epoch, with the identical
-    per-epoch manifests/ledger/lineage. Sparse (broadcast) epochs,
-    already-committed epochs, MOR mode, and legacy table layouts break or
-    bypass chunks and go through the per-epoch path; `fuse_epochs=1`
-    disables fusion entirely. Crash recovery granularity is the chunk: a
-    kill mid-chunk commits the published prefix and the ledger re-runs
-    only the remainder.
+    `merge_strategy` (in `apply_kwargs`) is validated before any work, as
+    in `apply_changes`. Epochs that resolve to the aligned strategy apply
+    in FUSED chunks of up to `fuse_epochs` (default 8) consecutive
+    uncommitted epochs, one fold job per chunk (`apply_changes_fused`) —
+    one scan + one shuffle + one carried-state read per chunk instead of
+    per epoch, with the identical per-epoch manifests/ledger/lineage. A
+    chunk of one runs the same fold, so `fuse_epochs=1` only shortens the
+    chunks. Sparse (broadcast), merge-on-read and already-committed epochs
+    break chunks and go through `apply_changes` one by one. Crash recovery
+    granularity is the chunk: a kill mid-chunk commits the published prefix
+    and the ledger re-runs only the remainder.
     """
     import os as _os
     import sys as _sys
     import time as _time
 
+    merge_strategy = apply_kwargs.get("merge_strategy", "auto")
+    _check_strategy(merge_strategy)
     _timing = _os.environ.get("SPARK_GRAFT_TIMING") == "1"
     _t0 = _time.time()
     stats = (
@@ -889,7 +892,7 @@ def replay(
     if parallel_epochs > 1:
         # Only merge-on-read epochs commute (pure file additions + LWW
         # resolution); COW merges rewrite shared buckets and must serialize.
-        if apply_kwargs.get("merge_strategy") != "mor":
+        if merge_strategy != "mor":
             raise ValueError("parallel_epochs requires merge_strategy='mor'")
         from concurrent.futures import ThreadPoolExecutor
 
@@ -898,31 +901,15 @@ def replay(
         # is preserved: each epoch is its own CAS-retried ledger commit.
         with ThreadPoolExecutor(max_workers=parallel_epochs) as ex:
             return list(ex.map(_one, epochs))
-    if fuse_epochs is None:
-        fuse_epochs = int(_os.environ.get("SPARK_GRAFT_FUSE_EPOCHS", "8"))
-    merge_strategy = apply_kwargs.get("merge_strategy", "auto")
-    layout_ok = (
-        fuse_epochs > 1
-        and merge_strategy in ("auto", "aligned")
-        and all("split" in f for f in table.snapshot().files)
-        # fused ignores these per-epoch knobs; their presence means the
-        # caller wants the per-epoch path
-        and not apply_kwargs.get("salt_buckets")
-        and not apply_kwargs.get("auto_compact_deltas")
-    )
-    if not layout_ok:
-        return [_one(e) for e in epochs]
+    fuse = _FUSE_EPOCHS if fuse_epochs is None else max(1, fuse_epochs)
 
     results: list[ApplyResult] = []
     run: list[int] = []
 
     def _fused_run() -> None:
         nonlocal run
-        for i in range(0, len(run), fuse_epochs):
-            chunk = run[i:i + fuse_epochs]
-            if len(chunk) == 1:
-                results.append(_one(chunk[0]))
-                continue
+        for i in range(0, len(run), fuse):
+            chunk = run[i:i + fuse]
             _tc = _time.time()
             results.extend(apply_changes_fused(
                 table, changes, job_id, chunk, stats,

@@ -249,15 +249,98 @@ def test_mor_auto_compaction_50_epoch_read_amplification(spark, tmp_path):
     assert_final_state_equal(read_table(table), oracle)
 
 
-def test_mixed_mor_then_cow(spark, tmp_path):
+@pytest.mark.parametrize("cow", ["broadcast", "aligned"])
+def test_mixed_mor_then_cow(spark, tmp_path, cow):
     changes = synthetic_changes(spark, n_events=1500, n_epochs=3, delete_frac=0.1, seed=11)
     table = create_transcripts_table(spark, str(tmp_path / "mix"), TRANSCRIPTS_SCHEMA, num_buckets=4)
     apply_changes(table, changes.filter("epoch = 0"), job_id="j", epoch=0, merge_strategy="mor")
     apply_changes(table, changes.filter("epoch = 1"), job_id="j", epoch=1, merge_strategy="mor")
     # COW merge over a delta-carrying table must resolve correctly
-    apply_changes(table, changes.filter("epoch = 2"), job_id="j", epoch=2, merge_strategy="shuffle")
+    apply_changes(table, changes.filter("epoch = 2"), job_id="j", epoch=2, merge_strategy=cow)
+    assert table.snapshot().summary["merge_strategy"] == cow
     oracle = sequential_apply(changes.toPandas(), PAYLOAD)
     assert_final_state_equal(read_table(table), oracle)
+
+
+def test_keyed_compaction_purges_delta_tombstone(spark, tmp_path):
+    """Keyed purge: a key whose tombstone winner sits in a MOR delta file
+    above an older live base row must vanish entirely — the purge follows
+    the fold's resolution, so the base row cannot win back — and every
+    other key keeps its state."""
+    t0 = datetime(2025, 1, 1)
+    t1 = datetime(2025, 1, 2)
+    base = spark.createDataFrame([
+        ("I", 1, t0, "c1", 0, "user", "gone", None, 0, 0),
+        ("I", 2, t0, "c1", 1, "user", "keep", None, 0, 0),
+        ("I", 3, t0, "c2", 0, "user", "old", None, 0, 1),
+        ("I", 4, t0, "c3", 0, "assistant", "same", None, 0, 1),
+    ], CHANGES_SCHEMA)
+    delta = spark.createDataFrame([
+        ("D", 5, t1, "c1", 0, None, None, None, 1, 0),
+        ("U", 6, t1, "c2", 0, "user", "new", None, 1, 1),
+    ], CHANGES_SCHEMA)
+    table = create_transcripts_table(spark, str(tmp_path / "kp"), TRANSCRIPTS_SCHEMA, num_buckets=2)
+    apply_changes(table, base, job_id="j", epoch=0, merge_strategy="aligned")
+    apply_changes(table, delta, job_id="j", epoch=1, merge_strategy="mor")
+    m = table.snapshot()
+    raw = table.read(resolve=False)
+    c10 = (F.col("conv_id") == "c1") & (F.col("turn_idx") == 0)
+    # the live base row and the tombstone winner above it, in a delta file
+    assert raw.filter(c10 & ~F.col("_deleted")).count() == 1
+    tomb_files = {r[0] for r in raw.filter(c10 & F.col("_deleted"))
+                  .select(F.input_file_name()).collect()}
+    delta_files = {f["path"] for f in m.files if f.get("delta")}
+    assert len(tomb_files) == 1
+    assert any(p.endswith(d) for p in tomb_files for d in delta_files)
+    before = {
+        (r.conv_id, r.turn_idx): (r.role, r.text, r.ts)
+        for r in read_table(table).collect()
+    }
+    assert ("c1", 0) not in before and before[("c2", 0)][1] == "new"
+
+    table.compact(purge_tombstones=True)
+    after_raw = table.read(resolve=False)
+    assert not table.snapshot().has_deltas
+    assert after_raw.filter(c10).count() == 0
+    assert after_raw.filter(F.col("_deleted")).count() == 0
+    after = {
+        (r.conv_id, r.turn_idx): (r.role, r.text, r.ts)
+        for r in read_table(table).collect()
+    }
+    assert after == before
+    assert after_raw.count() == len(after)
+
+
+def test_fold_squash_path_matches_one_sort(spark, tmp_path, monkeypatch):
+    """With the fold's squash floor at a few rows and small Arrow batches,
+    each (unit, epoch) run folds into its unit's state in several squashes
+    and the epoch's batch winners merge across them; every snapshot and the
+    lineage must equal an unpatched replay's."""
+    from go_tfdata_spark.operators import arrow_fold
+
+    changes = synthetic_changes(
+        spark, n_events=3000, n_epochs=3, delete_frac=0.15, late_frac=0.25,
+        seed=23,
+    )
+    t1 = create_transcripts_table(
+        spark, str(tmp_path / "a"), TRANSCRIPTS_SCHEMA, num_buckets=2)
+    t2 = create_transcripts_table(
+        spark, str(tmp_path / "b"), TRANSCRIPTS_SCHEMA, num_buckets=2)
+    replay(t1, changes, job_id="j", merge_strategy="aligned")
+    monkeypatch.setattr(arrow_fold, "_SQUASH_FLOOR", 4)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        replay(t2, changes, job_id="j", merge_strategy="aligned")
+    finally:
+        spark.conf.set(key, old)
+    for e in range(3):
+        assert _snap_map(t2, e, "j") == _snap_map(t1, e, "j"), f"epoch {e}"
+    lin = lambda t: sorted(  # noqa: E731
+        tuple(r) for r in lineage_metrics(t, "j").collect()
+    )
+    assert lin(t2) == lin(t1)
 
 
 def test_parallel_mor_replay_matches_oracle(spark, tmp_path):
@@ -272,6 +355,21 @@ def test_parallel_mor_replay_matches_oracle(spark, tmp_path):
     assert_final_state_equal(read_table(table), oracle)
     table.compact()
     assert_final_state_equal(read_table(table), oracle)
+
+
+def test_unknown_merge_strategy_fails_fast(spark, tmp_path):
+    """A strategy name outside MERGE_STRATEGIES raises before any work and
+    commits no version — it must not silently run another merge."""
+    table = create_transcripts_table(spark, str(tmp_path / "unk"), TRANSCRIPTS_SCHEMA, num_buckets=2)
+    changes = synthetic_changes(spark, n_events=200, n_epochs=2, seed=3)
+    v = table.current_version()
+    with pytest.raises(ValueError, match="merge_strategy"):
+        apply_changes(table, changes.filter("epoch = 0"), job_id="j", epoch=0,
+                      merge_strategy="shuffle")
+    with pytest.raises(ValueError, match="merge_strategy"):
+        replay(table, changes, job_id="j", merge_strategy="shuffle")
+    assert table.current_version() == v
+    assert table.committed_epochs("j") == set()
 
 
 def test_invalid_batch_fails_fast(spark, tmp_path):
@@ -324,10 +422,8 @@ def test_aligned_replay_matches_oracle(spark, tmp_path, kwargs, name):
     produce the identical final state as the sequential per-event oracle."""
     changes = synthetic_changes(spark, seed=43, **kwargs)
     table, _ = _roundtrip(spark, tmp_path, changes, name, merge_strategy="aligned")
-    # multi-epoch runs fuse by default (r7): both tags are the zipper path
-    assert table.snapshot().summary["merge_strategy"] in (
-        "aligned", "aligned-fused"
-    )
+    # every dense commit, fused chunk or single epoch, carries one tag
+    assert table.snapshot().summary["merge_strategy"] == "aligned"
 
 
 def test_aligned_merge_write_is_presharded(spark, tmp_path):
@@ -386,7 +482,8 @@ def test_aligned_merge_is_target_local(spark, tmp_path):
 
 def test_aligned_merge_legacy_manifest_falls_back(spark, tmp_path):
     """Manifests written before the split record (round-4 layout) must still
-    merge correctly via the union path."""
+    merge correctly: the dense merge first compacts the affected legacy
+    buckets, which records every file's split."""
     import json
 
     table = create_transcripts_table(
@@ -408,6 +505,7 @@ def test_aligned_merge_legacy_manifest_falls_back(spark, tmp_path):
            merge_strategy="aligned")
     oracle = sequential_apply(changes.toPandas(), PAYLOAD)
     assert_final_state_equal(read_table(table), oracle)
+    assert all("split" in f for f in table.snapshot().files)
 
 
 def test_aligned_schema_evolution_reads_old_files_locally(spark, tmp_path):
@@ -461,7 +559,14 @@ def test_fused_replay_equals_per_epoch(spark, tmp_path, num_buckets):
     r2 = replay(t2, changes, job_id="j", fuse_epochs=3,
                 merge_strategy="aligned")  # chunks [0,1,2], [3,4]
     assert [r.epoch for r in r2] == [r.epoch for r in r1]
+    # fuse_epochs=1 runs the same fold kernel, so each snapshot is also
+    # checked against the independent sequential oracle
+    pdf = changes.toPandas()
     for e in range(5):
+        assert_final_state_equal(
+            read_table(t1, as_of_epoch=e, job_id="j"),
+            sequential_apply(pdf[pdf.epoch <= e], PAYLOAD),
+        )
         assert _snap_map(t2, e, "j") == _snap_map(t1, e, "j"), f"epoch {e}"
     lin = lambda t: sorted(  # noqa: E731
         tuple(r) for r in lineage_metrics(t, "j").collect()
