@@ -37,6 +37,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from go_tfdata_spark.worker import release_zip_finders
+
 # Deterministic seed corpus for DEFAULT_MERGES (plain ASCII on purpose:
 # normalization and char splitting then agree byte-for-byte across Python,
 # Catalyst, and DuckDB).
@@ -119,6 +121,7 @@ def bpe_token_count(
 
     @F.pandas_udf(T.LongType())
     def _count(s: pd.Series) -> pd.Series:
+        release_zip_finders()
         memo: dict[str, int] = {}
 
         def one(t) -> int:

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from go_tfdata_spark.worker import release_zip_finders
+
 # media row: opaque payload + typed metadata (FIXTURES-style open schema)
 MEDIA_SCHEMA = T.StructType(
     [
@@ -104,6 +106,7 @@ def decode_and_featurize(df: DataFrame, batch_size_hint: int = 1024) -> DataFram
     of an 8x8 luminance summary grid."""
 
     def _featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        release_zip_finders()
         for pdf in batches:
             imgs = [_decode_any(p) for p in pdf["payload"]]
             grids = [_grid8(im) for im in imgs]
@@ -156,6 +159,7 @@ def audio_features(df: DataFrame) -> DataFrame:
         }
 
     def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        release_zip_finders()
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -206,6 +210,7 @@ def video_frames(df: DataFrame, every_nth: int = 1) -> DataFrame:
     from go_tfdata_spark.functions.avi import decode_avi_frames
 
     def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        release_zip_finders()
         for pdf in batches:
             out = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):

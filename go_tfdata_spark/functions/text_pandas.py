@@ -16,14 +16,18 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
+from go_tfdata_spark.worker import release_zip_finders
+
 
 @pandas_udf("string")
 def normalize_text_pd(s: pd.Series) -> pd.Series:
+    release_zip_finders()
     return s.str.strip().str.lower().str.replace(r"\s+", " ", regex=True)
 
 
 @pandas_udf("long")
 def token_count_pd(s: pd.Series) -> pd.Series:
+    release_zip_finders()
     norm = s.str.strip().str.lower().str.replace(r"\s+", " ", regex=True)
     n = norm.str.split(" ").str.len()
     return n.where(norm.str.len() > 0, 0).astype("int64")

@@ -1,10 +1,8 @@
 """Vector functions over array<float> embedding columns.
 
 All JVM-side higher-order functions (`zip_with` + `aggregate`): the dot
-product of two 64-dim vectors never touches Python. For very wide vectors
-a Pandas-UDF/numpy batch path can win on SIMD — provided as
-`cosine_pandas` for comparison — but the default stays JVM-side so
-predicate pushdown/codegen survive around it.
+product of two 64-dim vectors never touches Python, and predicate
+pushdown/codegen survive around it.
 """
 
 from __future__ import annotations
@@ -28,20 +26,3 @@ def l2_norm(u: Column) -> Column:
 def cosine_similarity(u: Column, v: Column) -> Column:
     return dot(u, v) / (l2_norm(u) * l2_norm(v))
 
-
-def cosine_pandas(dim: int):
-    """Arrow-batched numpy cosine (pandas UDF) — the vectorized alternative
-    for wide embeddings; same semantics as `cosine_similarity`."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(u: pd.Series, v: pd.Series) -> pd.Series:
-        a = np.stack(u.to_numpy())
-        b = np.stack(v.to_numpy())
-        num = (a * b).sum(axis=1)
-        den = np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
-        return pd.Series(num / den)
-
-    return _cos

@@ -45,6 +45,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from go_tfdata_spark.worker import release_zip_finders
+
 # Incremental-fold squash floor: a unit's buffered epoch rows fold into its
 # state once they reach max(floor, len(state)) rows — O(1) amortised copies
 # per row. 512k keeps typical units to ONE sort per epoch (measured:
@@ -289,6 +291,7 @@ def aligned_lww_fold_fused(
     ])
 
     def fold(batches):
+        release_zip_finders()
         import uuid as _uuid
 
         import numpy as np
@@ -432,8 +435,9 @@ def aligned_lww_fold_fused(
             )
 
     # Sized by the cluster, not the layout: each Python task costs a fixed
-    # ~0.25 CPU-s of worker set-up whatever its input. The 2x leaves slack
-    # for hash skew when units are spread over the tasks.
+    # ~0.03 CPU-s of Python-worker set-up whatever its input (a trivial
+    # 4-task mapInArrow job on 4 vCPUs). The 2x leaves slack for hash skew
+    # when units are spread over the tasks.
     n_tasks = min(num_buckets * splits,
                   2 * df.sparkSession.sparkContext.defaultParallelism)
     pid_expr = (

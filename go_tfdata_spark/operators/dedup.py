@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from go_tfdata_spark.functions.text import fingerprint, rolling_hash
+from go_tfdata_spark.worker import release_zip_finders
 
 _MERSENNE = 2**31 - 1
 
@@ -186,6 +187,7 @@ def _exploded_distinct_shingles_arrow(df: DataFrame, id_col: str, text_col: str,
     id_field = df.schema[id_col]
 
     def shingler(batches):
+        release_zip_finders()
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -341,6 +343,7 @@ def shingle_jaccard_pairs(
         thr = float(threshold)
 
         def _count_pairs(batches):
+            release_zip_finders()
             import numpy as np
             import pyarrow as pa
             import pyarrow.compute as pc
@@ -526,6 +529,7 @@ def minhash_signatures(
     nn = int(n)
 
     def kernel(batches):
+        release_zip_finders()
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -795,6 +799,7 @@ def _simhash_arrow(df: DataFrame, id_col: str, text_col: str, bits: int) -> Data
     nbits = int(bits)
 
     def kernel(batches):
+        release_zip_finders()
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from go_tfdata_spark.functions.vectors import cosine_similarity
+from go_tfdata_spark.worker import release_zip_finders
 
 # Bounded registry of live cached assignments (path=None indexes): building
 # many throwaway indexes in one session (contract runs, benches) must not
@@ -142,6 +143,7 @@ class IVFIndex:
         vec_col = self.vec_col
 
         def assign(batches):
+            release_zip_finders()
             ids_desc, Cn = bc.value
             id_arr = np.asarray(ids_desc)
             for rb in batches:

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from go_tfdata_spark.worker import release_zip_finders
+
 
 def identity(df: DataFrame) -> DataFrame:
     """T3 — transformation.go:78-84."""
@@ -63,6 +65,7 @@ def vectorized(
         out_schema = schema if schema is not None else df.schema
 
         def _map(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
+            release_zip_finders()
             for pdf in batches:
                 yield fn(pdf)
 
@@ -98,6 +101,7 @@ def _binary_decoder(dt: T.DataType):
 
         @pandas_udf("long")
         def dec_i64(s: pd.Series) -> pd.Series:
+            release_zip_finders()
             return s.map(lambda b: None if b is None else _zigzag_varint(bytes(b)))
 
         return dec_i64
@@ -105,6 +109,7 @@ def _binary_decoder(dt: T.DataType):
 
         @pandas_udf("float")
         def dec_f32(s: pd.Series) -> pd.Series:
+            release_zip_finders()
             import struct
 
             return s.map(
@@ -116,6 +121,7 @@ def _binary_decoder(dt: T.DataType):
 
         @pandas_udf("array<long>")
         def dec_i64s(s: pd.Series) -> pd.Series:
+            release_zip_finders()
             return s.map(
                 lambda b: None
                 if b is None
@@ -127,6 +133,7 @@ def _binary_decoder(dt: T.DataType):
 
         @pandas_udf("array<float>")
         def dec_f32s(s: pd.Series) -> pd.Series:
+            release_zip_finders()
             return s.map(
                 lambda b: None
                 if b is None

@@ -6,6 +6,12 @@ is one that also holds on a 1000-executor cluster reading 100 TB:
 - Arrow on (all pandas-UDF stages are Arrow-batched; no per-row Python),
 - shuffle partitions sized to cores locally; on a real cluster AQE coalesces
   from a high initial number, so we set the initial high and let AQE shrink.
+- the compiled-class cache (`spark.sql.codegen.cache.maxEntries`, a static
+  conf) holds a whole query pass. At Spark's default of 100, one pass of the
+  dedup/similarity queries compiles ~145 classes, and the cyclic access
+  pattern defeats the LRU: every pass recompiled every class (~1.2 s of
+  Janino per pass on 4 vCPUs). `CODEGEN_CACHE_ENTRIES` is a constant, not
+  a knob.
 """
 
 from __future__ import annotations
@@ -13,6 +19,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Compiled-class cache size: one cold pass of every `__spark_entry__.queries()`
+# entry compiles 552 classes at sf0.01; this leaves over 2x headroom.
+CODEGEN_CACHE_ENTRIES = 1200
 
 
 def get_spark(
@@ -43,6 +53,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_ARROW_BATCH", "65536"),
         )
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # Files: keep scan partitions close to the cluster parallelism.

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from go_tfdata_spark.operators.assembly import assemble_records, complete_records
+from go_tfdata_spark.worker import release_zip_finders
 
 # Reference core.Sample stores the record key under "__key__"
 # (tfdata/core/sample.go:7); here the key is a real column, which user code
@@ -92,6 +93,7 @@ def read_tar_members(
     files = spark.read.format("binaryFile").load(paths).select("path")
 
     def parse(batches):
+        release_zip_finders()
         import tarfile
 
         import pandas as pd

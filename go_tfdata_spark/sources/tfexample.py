@@ -37,6 +37,8 @@ import struct
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from go_tfdata_spark.worker import release_zip_finders
+
 # ---------------------------------------------------------------- primitives
 
 
@@ -232,6 +234,7 @@ def read_tfexamples(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     files = spark.read.format("binaryFile").load(paths)
 
     def parse(batches):
+        release_zip_finders()
         import pandas as pd
 
         for pdf in batches:
@@ -269,6 +272,7 @@ def write_tfexamples(df: DataFrame, out_dir: str) -> int:
     cols = df.columns
 
     def write_partition(batches):
+        release_zip_finders()
         import pandas as pd
 
         path = os.path.join(out_dir, f"part-{uuid.uuid4().hex}.tfrecord")

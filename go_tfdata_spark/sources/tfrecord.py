@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from go_tfdata_spark.worker import release_zip_finders
+
 # Lossless, session-TZ-independent timestamp round-trip (same rationale as
 # operators/lww.py:_JSON_TS_OPTS — the default format truncates to ms).
 _JSON_OPTS = {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"}
@@ -326,6 +328,7 @@ def write_tfrecords(df: DataFrame, out_dir: str) -> int:
     )
 
     def write_partition(batches):
+        release_zip_finders()
         import pandas as pd
 
         path = os.path.join(out_dir, f"part-{uuid.uuid4().hex}.tfrecord")
@@ -350,6 +353,7 @@ def read_tfrecords(spark: SparkSession, in_dir: str, schema: T.StructType | None
     files = spark.read.format("binaryFile").load(os.path.join(in_dir, "*.tfrecord"))
 
     def unframe(batches):
+        release_zip_finders()
         import pandas as pd
 
         for pdf in batches:

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from go_tfdata_spark.worker import release_zip_finders
+
 ASSEMBLED_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -66,6 +68,7 @@ def assemble_conversations_stream(
         tombstone_retention_ms = 100 * timeout_ms
 
     def fn(key, pdfs, state: GroupState):
+        release_zip_finders()
         (conv_id,) = key
         if state.hasTimedOut:
             turn_idxs, texts, done = state.get

@@ -40,6 +40,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
+from go_tfdata_spark.worker import release_zip_finders
+
 FORMAT_NAME = "go_tfdata_cdf"
 _MANIFEST_DIR = "_manifests"  # mirrors lake.table layout constants
 
@@ -264,6 +266,7 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
 
     # ---------------------------------------------------------------- read
     def read(self, partition: _FeedPartition):
+        release_zip_finders()
         import numpy as np
         import pandas as pd
 
@@ -347,14 +350,18 @@ def register_change_feed(spark) -> None:
     not inherit --py-files, so a by-reference pickle of the source class
     fails to import there on any deployment where the engine arrives via
     py-files/archives rather than a cluster-wide install. The module is
-    stdlib+pyspark-only (see `_ledger_contains`), so by-value is cheap and
-    total."""
+    stdlib+pyspark-only (see `_ledger_contains`) apart from
+    `go_tfdata_spark.worker`, which is stdlib-only and shipped by value
+    too, so by-value is cheap and total."""
     try:
         import sys
 
         from pyspark import cloudpickle
 
+        from go_tfdata_spark import worker
+
         cloudpickle.register_pickle_by_value(sys.modules[__name__])
+        cloudpickle.register_pickle_by_value(worker)
     except Exception:
         pass  # older cloudpickle: fall back to by-reference (in-process ok)
     spark.dataSource.register(ChangeFeedDataSource)

@@ -410,3 +410,53 @@ def test_repair_turn_order(spark):
            for r in repair_turn_order(df).collect()}
     assert out == {("c1", 0): "first", ("c1", 1): "second", ("c1", 2): "late",
                    ("c2", 0): "only"}
+
+
+def test_codegen_cache_holds_a_dedup_pass(spark, docs):
+    """The session's compiled-class cache holds a whole pass of this module's
+    text and vector dedup queries (~157 classes cold): running the pass
+    again, back to back, compiles next to nothing. At Spark's default cache
+    size of 100 the pass does not fit, the access pattern is cyclic, and
+    every class is compiled again.
+
+    Not exactly nothing: a whole-stage class's source embeds its codegen
+    stage id, and AQE numbers stages in the order their inputs finish, so a
+    warm pass now and then meets a renumbered pipeline (4 classes per
+    affected query; up to 8 per pass seen). The bound stays far below the
+    ~155 a cache smaller than the pass recompiles."""
+    from go_tfdata_spark.operators.dedup import dedup_by_clusters, release_caches, simhash_near_dups
+
+    rows = [(i, [float(i % 5), 1.0, 0.5 * i, -1.0]) for i in range(40)]
+    vecs = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    q = rows[7][1]
+
+    def queries():
+        pairs = minhash_near_dups(docs, "doc_id", "text", num_hashes=16, bands=8, threshold=0.5)
+        yield dedup_exact(docs, "text", "doc_id")
+        yield shingle_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.4)
+        yield pairs
+        yield simhash(docs, "doc_id", "text")
+        yield simhash_near_dups(docs, "doc_id", "text", max_hamming=5)
+        yield dedup_by_clusters(docs, pairs, "doc_id")
+        yield embedding_near_dups(vecs, "vec_id", "v", threshold=0.95, exact=True)
+        yield embedding_near_dups(vecs, "vec_id", "v", threshold=0.95, hyperplanes=4, dim=4)
+        yield brute_force_topk(vecs, "v", q, k=5, id_col="vec_id")
+        idx = IVFIndex(vecs, "v", "vec_id", ncells=4)
+        yield idx.topk(q, k=5, nprobe=4)
+        idx.close()
+
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_pass() -> int:
+        before = metric.getCount()
+        release_caches()
+        spark.catalog.clearCache()
+        for df in queries():
+            df.collect()
+        release_caches()
+        spark.catalog.clearCache()
+        return metric.getCount() - before
+
+    first = one_pass()
+    warm = one_pass()
+    assert warm <= 40, f"a warm pass compiled {warm} classes; the first pass {first}"
