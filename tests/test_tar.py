@@ -3,11 +3,23 @@
 Mirrors /root/reference/test/tar_test.go:17-39 (small-10.tar: 10 samples,
 each with cls+jpg), :41-67 (small-mnist-21.tar: 21 samples, cls is one byte
 in '0'..'9'), :69-91 (tar.gz parity), :93-121 (invalid archive raises).
+
+Three tests check the contents of the reference's golden archives under
+``FIXTURES`` and are skipped where those files are absent:
+``test_small_tar_ten_complete_samples`` and
+``test_member_rows_key_field_split`` (small-10.tar) and
+``test_mnist_tar_classes_are_digits`` (small-mnist-21.tar).
+Every other test builds its archive inside the test. The plan and pruning
+checks plan over such an archive. ``test_targz_matches_tar`` compares a
+built TAR with its gzip, and also the reference's small-10.tar/.tar.gz pair
+wherever both files exist.
 """
 
 from __future__ import annotations
 
+import gzip
 import io
+import os
 import tarfile
 
 import pytest
@@ -18,6 +30,30 @@ from go_tfdata_spark.sources.tar import read_tar_members, read_tar_samples
 FIXTURES = "/root/reference/test/data"
 
 
+def _fixture(name):
+    """Skip unless the reference fixture ``name`` exists under FIXTURES."""
+    return pytest.mark.skipif(
+        not os.path.exists(f"{FIXTURES}/{name}"),
+        reason=f"reference fixture {name} not present",
+    )
+
+
+def _write_sample_tar(path):
+    """Write a TAR of 10 samples ``s/<i>.{cls,jpg}`` (the shape of the
+    reference's small-10.tar) to ``path`` and return its bytes."""
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w") as tf:
+        for i in range(10):
+            for f in ("cls", "jpg"):
+                data = f"{i:03d}.{f}".encode()
+                info = tarfile.TarInfo(name=f"s/{i:03d}.{f}")
+                info.size = len(data)
+                tf.addfile(info, io.BytesIO(data))
+    path.write_bytes(buf.getvalue())
+    return buf.getvalue()
+
+
+@_fixture("small-10.tar")
 def test_small_tar_ten_complete_samples(spark):
     samples = read_tar_samples(spark, f"{FIXTURES}/small-10.tar").collect()
     assert len(samples) == 10  # tar_test.go:38
@@ -25,6 +61,7 @@ def test_small_tar_ten_complete_samples(spark):
         assert set(r.members.keys()) == {"cls", "jpg"}  # + key column = 3 entries
 
 
+@_fixture("small-mnist-21.tar")
 def test_mnist_tar_classes_are_digits(spark):
     samples = read_tar_samples(spark, f"{FIXTURES}/small-mnist-21.tar").collect()
     assert len(samples) == 21  # tar_test.go:66
@@ -34,19 +71,31 @@ def test_mnist_tar_classes_are_digits(spark):
         assert len(cls) == 1 and b"0" <= cls <= b"9"  # tar_test.go:58-60
 
 
-def test_targz_matches_tar(spark):
-    """NewTarGzReader parity (tar_test.go:69-91): same records either way."""
-    tar = {
-        (r.key, tuple(sorted(r.members.keys())))
-        for r in read_tar_samples(spark, f"{FIXTURES}/small-10.tar").collect()
-    }
-    tgz = {
-        (r.key, tuple(sorted(r.members.keys())))
-        for r in read_tar_samples(spark, f"{FIXTURES}/small-10.tar.gz").collect()
-    }
-    assert tar == tgz and len(tar) == 10
+def test_targz_matches_tar(spark, tmp_path):
+    """NewTarGzReader parity (tar_test.go:69-91): same records either way.
+
+    The reference's small-10.tar.gz is the gzip of its small-10.tar, so the
+    pair is built here the same way; the reference pair is compared too
+    wherever both files exist."""
+    built = tmp_path / "s.tar"
+    (tmp_path / "s.tar.gz").write_bytes(gzip.compress(_write_sample_tar(built)))
+    pairs = [(str(built), f"{built}.gz")]
+    ref = f"{FIXTURES}/small-10.tar"
+    if os.path.exists(ref) and os.path.exists(f"{ref}.gz"):
+        pairs.append((ref, f"{ref}.gz"))
+    for tar_path, tgz_path in pairs:
+        tar = {
+            (r.key, tuple(sorted(r.members.keys())))
+            for r in read_tar_samples(spark, tar_path).collect()
+        }
+        tgz = {
+            (r.key, tuple(sorted(r.members.keys())))
+            for r in read_tar_samples(spark, tgz_path).collect()
+        }
+        assert tar == tgz and len(tar) == 10
 
 
+@_fixture("small-10.tar")
 def test_member_rows_key_field_split(spark):
     rows = read_tar_members(spark, f"{FIXTURES}/small-10.tar").collect()
     assert len(rows) == 20  # 10 samples x {cls, jpg}
@@ -82,20 +131,29 @@ def test_incomplete_records_filtered_by_expected_fields(spark, tmp_path):
     assert greedy.count() == 2  # greedy reader emits incomplete records too
 
 
-def test_tar_plan_is_arrow_batched_not_per_row(spark):
+def _plan_archive(tmp_path_factory):
+    """A small TAR at a path free of the word ``content``: the executed
+    plan prints the scan's Location, and a test's own ``tmp_path`` is named
+    after the test."""
+    p = tmp_path_factory.mktemp("plan") / "a.tar"
+    _write_sample_tar(p)
+    return str(p)
+
+
+def test_tar_plan_is_arrow_batched_not_per_row(spark, tmp_path_factory):
     plan = read_tar_members(
-        spark, f"{FIXTURES}/small-10.tar"
+        spark, _plan_archive(tmp_path_factory)
     )._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan or "ArrowEvalPython" in plan
 
 
-def test_tar_scan_never_materializes_archive_content(spark):
+def test_tar_scan_never_materializes_archive_content(spark, tmp_path_factory):
     """The scan is pruned to `path` — task memory is O(member), not
     O(archive) (the reason the reference has a seek reader,
     seekreader.go:16-35). The binaryFile `content` column must not appear
     in the executed plan's read schema."""
     plan = read_tar_members(
-        spark, f"{FIXTURES}/small-10.tar"
+        spark, _plan_archive(tmp_path_factory)
     )._jdf.queryExecution().executedPlan().toString()
     assert "content" not in plan
     assert "path" in plan

@@ -4,9 +4,20 @@ Mirrors /root/reference/test/tfrecord_test.go:97-110 (tf-train-single.record
 holds exactly 1 Example), :112-129 (tf-train-medium.record holds 7, each
 with an `image_raw` bytes feature), and :131-168 (write->read roundtrip of
 100 examples).
+
+Three tests decode the reference's golden files under ``FIXTURES``, written
+by TensorFlow, and are skipped where those files are absent:
+``test_single_record_pure_python`` (tf-train-single.record),
+``test_medium_record_pure_python`` (tf-train-medium.record) and
+``test_spark_read_golden_fixtures`` (both). The roundtrip tests build their
+examples inside the test.
 """
 
 from __future__ import annotations
+
+import os
+
+import pytest
 
 from go_tfdata_spark.sources.tfexample import (
     decode_example,
@@ -19,16 +30,26 @@ from go_tfdata_spark.sources.tfrecord import unframe_records
 FIXTURES = "/root/reference/test/data"
 
 
+def _fixtures(*names):
+    """Skip unless every reference fixture in ``names`` exists under FIXTURES."""
+    missing = [n for n in names if not os.path.exists(f"{FIXTURES}/{n}")]
+    return pytest.mark.skipif(
+        bool(missing), reason=f"reference fixture {', '.join(missing)} not present"
+    )
+
+
 def _examples(path):
     with open(path, "rb") as f:
         return [decode_example(p) for p in unframe_records(f.read())]
 
 
+@_fixtures("tf-train-single.record")
 def test_single_record_pure_python():
     exs = _examples(f"{FIXTURES}/tf-train-single.record")
     assert len(exs) == 1  # tfrecord_test.go:107-109
 
 
+@_fixtures("tf-train-medium.record")
 def test_medium_record_pure_python():
     exs = _examples(f"{FIXTURES}/tf-train-medium.record")
     assert len(exs) == 7  # tfrecord_test.go:122
@@ -54,6 +75,7 @@ def test_roundtrip_all_three_kinds():
     assert back["negative"] == [-7, 2**40]
 
 
+@_fixtures("tf-train-medium.record", "tf-train-single.record")
 def test_spark_read_golden_fixtures(spark):
     df = read_tfexamples(spark, f"{FIXTURES}/tf-train-medium.record")
     rows = df.collect()
