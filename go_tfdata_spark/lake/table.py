@@ -55,7 +55,7 @@ _SPLIT_COL = "_split"
 # every cluster size) so file counts stay bounded: files/commit <= buckets*4.
 _WRITE_SPLITS_PER_BUCKET = 4
 
-# Broadcast-hint byte budget for merge key sets. An EXPLICIT broadcast hint
+# Broadcast-hint byte budget for join build sides. An EXPLICIT broadcast hint
 # is honored by Spark regardless of size (AQE does NOT demote it), so the
 # hint must be gated on an estimated byte size up front; past this budget the
 # join is left to the planner (AQE can still broadcast at runtime if the
@@ -409,14 +409,9 @@ class LakeTable:
 
     # --------------------------------------------------------------- writes
     def _write_data(
-        self, df: DataFrame, m: Manifest, presharded: bool = False, delta: bool = False
+        self, df: DataFrame, m: Manifest, delta: bool = False
     ) -> list[dict]:
         """Write df (bucketed) under a fresh uuid dir; return file entries.
-
-        `presharded=True` means the caller guarantees each input partition
-        already holds rows of (mostly) one bucket — e.g. rows read straight
-        from per-bucket files — so the clustering shuffle is skipped and the
-        write is shuffle-free.
 
         Every file lands under `_bucket=B/_split=S/` and its manifest entry
         records both, so each file holds rows of exactly one (bucket, split)
@@ -427,17 +422,16 @@ class LakeTable:
         splits = _WRITE_SPLITS_PER_BUCKET
         out = df.withColumn(_BUCKET_COL, bucket_expr(m.bucket_by, m.num_buckets)) \
             .withColumn(_SPLIT_COL, split_expr(m.split_by or m.bucket_by, splits))
-        if not presharded:
-            # One parquet dir per bucket partition: rewrites and reads prune
-            # by bucket without opening files. Cluster rows by (bucket,
-            # split) before the write: bounded files per bucket (the
-            # small-files guard) AND no single hot bucket bounding the write
-            # stage's makespan — with Zipf-skewed conv_ids one bucket can
-            # carry several times the mean, and an unsplit repartition caps
-            # scaling at (total work / largest bucket) regardless of cores.
-            out = out.repartition(
-                m.num_buckets * splits, F.col(_BUCKET_COL), F.col(_SPLIT_COL)
-            )
+        # One parquet dir per bucket partition: rewrites and reads prune by
+        # bucket without opening files. Cluster rows by (bucket, split)
+        # before the write: bounded files per bucket (the small-files guard)
+        # AND no single hot bucket bounding the write stage's makespan —
+        # with Zipf-skewed conv_ids one bucket can carry several times the
+        # mean, and an unsplit repartition caps scaling at (total work /
+        # largest bucket) regardless of cores.
+        out = out.repartition(
+            m.num_buckets * splits, F.col(_BUCKET_COL), F.col(_SPLIT_COL)
+        )
         out.write.partitionBy(_BUCKET_COL, _SPLIT_COL).parquet(
             abs_dir, mode="errorifexists"
         )
@@ -479,7 +473,6 @@ class LakeTable:
         df: DataFrame | None,
         summary: dict | None = None,
         max_retries: int = 20,
-        presharded: bool = False,
         finalize=None,
         entries: list[dict] | None = None,
     ) -> Manifest:
@@ -487,9 +480,10 @@ class LakeTable:
         as DELTA files — zero target scan, zero rewrite, write volume
         O(batch). Reads resolve per key via the table's (key_cols,
         order_cols); `compact()` folds deltas back into base files. This is
-        the engine's Iceberg-MOR path: the COW `merge_lww` gives
-        read-optimized tables, `append_delta` gives write-optimized ingest —
-        the standard trade for streaming upserts.
+        the engine's Iceberg-MOR path: the copy-on-write
+        `merge_aligned_fused` gives read-optimized tables, `append_delta`
+        gives write-optimized ingest — the standard trade for streaming
+        upserts.
 
         Delta appends are pure file ADDITIONS and LWW resolution is
         commutative, so concurrent appenders are safe: on a CAS conflict the
@@ -510,7 +504,7 @@ class LakeTable:
         m = self._next_manifest(s)
         if entries is None:
             entries = self._write_data(
-                self._conform(df, m.schema), m, presharded=presharded, delta=True
+                self._conform(df, m.schema), m, delta=True
             )
         # else: files already on disk (write-in-fold); entries must carry
         # path/bucket/split and "delta": True — only the manifest commits here
@@ -592,73 +586,6 @@ class LakeTable:
         raise CommitConflict("update_schema lost 20 CAS races")
 
     # ----------------------------------------------------------------- merge
-    def merge_lww(
-        self,
-        source: DataFrame,
-        key_cols: list[str],
-        order_cols: list[str],
-        summary: dict | None = None,
-        affected: list[int] | None = None,
-        source_rows: int | None = None,
-    ) -> Manifest:
-        """Order-conditional MERGE for SPARSE batches: per key, keep whichever
-        of {current target row, source row} has the greater (order_cols)
-        tuple.
-
-        This is ``MERGE INTO t USING s ON keys WHEN MATCHED AND s.order >
-        t.order THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`` — the
-        matched resolution expressed as the engine's `lww_latest` max_by
-        kernel, which is correct for arbitrarily late / out-of-order change
-        batches: an epoch-2 event with an older (ts, lsn) than the
-        already-applied state can never win.
-
-        Tombstones (rows flagged deleted) are RETAINED as physical rows so a
-        late update older than an applied delete cannot resurrect the key;
-        user-facing reads filter them (see operators/merge.py). Compaction
-        may purge tombstones older than the replay watermark.
-
-        Physical plan (broadcast passthrough): the scan is pruned to the
-        buckets that contain source keys; target rows whose key is NOT in
-        the source pass through via a broadcast anti join (no shuffle; read
-        from per-bucket files, written back shuffle-free via `presharded`);
-        only colliding rows ∪ source go through the LWW fold, so shuffle
-        volume is O(change batch), not O(table). New manifest = untouched
-        files + rewrites, CAS-published. Dense batches (keys ~ table) take
-        `merge_aligned_fused` instead, which never builds a broadcast.
-        """
-        from go_tfdata_spark.operators.lww import lww_latest
-
-        m = self._next_manifest({"operation": "merge", **(summary or {})})
-        src = self._conform(source, m.schema)
-
-        if affected is None:
-            bexpr = bucket_expr(m.bucket_by, m.num_buckets)
-            affected = [r[0] for r in src.select(bexpr.alias("b")).distinct().collect()]
-        if not affected:
-            return self.snapshot()
-
-        target = self.read_buckets(affected)
-        untouched = [f for f in m.files if f.get("bucket") not in set(affected)]
-        # Size-gated hint (see gate_broadcast): callers that already know
-        # the folded-batch key count pass it as `source_rows` for an exact
-        # byte estimate; otherwise Catalyst stats decide. Oversized key sets
-        # run unhinted — the planner (incl. AQE) picks the join.
-        keys = gate_broadcast(src.select(*key_cols).distinct(), source_rows)
-        passthrough = target.join(keys, on=key_cols, how="left_anti")
-        colliding = target.join(keys, on=key_cols, how="left_semi")
-        winners = lww_latest(
-            colliding.unionByName(src), key_cols=key_cols, order_cols=order_cols
-        )
-        m.files = (
-            untouched
-            + self._write_data(passthrough, m, presharded=True)
-            + self._write_data(winners, m)
-        )
-        m.summary["affected_buckets"] = sorted(affected)
-        m.summary["merge_strategy"] = "broadcast"
-        self._publish(m)
-        return m
-
     def _fold_write(
         self,
         m: Manifest,
@@ -722,7 +649,7 @@ class LakeTable:
         lineage_acc=None,
         finalize_by_epoch=None,
     ) -> list[Manifest]:
-        """The dense copy-on-write merge, for a chunk of consecutive epochs
+        """The copy-on-write merge, for a chunk of consecutive epochs
         (one epoch is a chunk of one): ONE scan + ONE shuffle + ONE fold job
         for the whole chunk, then one ledger-carrying manifest commit PER
         EPOCH — the exactly-once contract is per epoch (each epoch's
@@ -846,10 +773,10 @@ class LakeTable:
         A bucket is rewritten when it holds more than `max_files_per_bucket`
         files, MOR delta files, or files without a recorded split (written
         before manifests recorded one — the rewrite records it, which is
-        how legacy buckets reach the layout the dense merge needs), and
+        how legacy buckets reach the layout the merge fold needs), and
         always under `purge_tombstones`.
 
-        Keyed tables resolve with the dense Arrow fold: the buckets' rows
+        Keyed tables resolve with the merge's Arrow fold: the buckets' rows
         are fed as one epoch onto the write layout, files written in the
         fold workers, and the purge drops tombstone WINNERS after
         resolution (dropping tombstone rows first would let an older live

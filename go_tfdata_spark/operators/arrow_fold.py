@@ -1,4 +1,4 @@
-"""Bucket-aligned Arrow LWW fold — the engine's one dense fold kernel.
+"""Bucket-aligned Arrow LWW fold — the engine's one merge fold kernel.
 
 The encoded/max_by folds (operators/lww.py) aggregate BEFORE the table's
 bucket layout is imposed, so a COW merge pays two payload shuffles: the
@@ -16,8 +16,8 @@ hash-aggregate) plus a to_json/from_json round-trip.
       -> manifest entries (path, bucket, split, nrows, epoch) as output
 
 ONE payload shuffle total, and the winner payload never crosses back into
-the JVM. Every dense write runs through it: a fused replay chunk and a
-single `apply_changes` epoch (`LakeTable.merge_aligned_fused`), a
+the JVM. Every merge write runs through it: a fused replay chunk and a
+single `apply_changes` epoch of any size (`LakeTable.merge_aligned_fused`), a
 merge-on-read delta batch (no carried files) and a keyed compaction (the
 bucket's rows as one epoch, tombstones optionally purged).
 
@@ -138,10 +138,11 @@ def _winner_and_batch_table(tbl, key_cols, sort_cols, isb_col, batch_slim_cols):
 
 
 def _conform_arrow(tbl, pa_schema):
-    """Conform a parquet-read Arrow table to the fold's Arrow schema:
-    reorder, drop extras, null-fill columns the file predates (additive
-    schema evolution), and cast physical types — Spark writes timestamps
-    as INT96/naive-ns while the fold schema carries timestamp[us, tz=UTC];
+    """Conform an Arrow table (a parquet read or an incoming batch) to the
+    fold's Arrow schema: reorder, drop extras, null-fill columns the file
+    predates (additive schema evolution), and cast physical types — Spark
+    writes timestamps as INT96/naive-ns, and tags batch timestamps with the
+    session timezone, while the fold schema carries timestamp[us, tz=UTC];
     the cast is a unit/annotation change on the same UTC-epoch int64s,
     verified lossless either direction."""
     import pyarrow as pa
@@ -276,7 +277,6 @@ def aligned_lww_fold_fused(
     pa_schema = pa.schema(
         [pa.field(f.name, to_arrow_type(f.dataType)) for f in out_fields]
     )
-    cols = [f.name for f in out_fields]
     sort_cols = list(order_cols)
     slim_cols = list(dict.fromkeys([*key_cols, *sort_cols, "_src_part", "_deleted"]))
     wdirs = {int(e): d for e, d in write_dirs.items()}
@@ -401,7 +401,9 @@ def aligned_lww_fold_fused(
             cut = (np.flatnonzero(
                 (bs[1:] != bs[:-1]) | (ss[1:] != ss[:-1]) | (es[1:] != es[:-1])
             ) + 1).tolist()
-            t = pa.Table.from_batches([rb]).select(cols)
+            # Spark tags batch timestamps with the session timezone; carried
+            # files load as UTC, and Arrow refuses to concat the two
+            t = _conform_arrow(pa.Table.from_batches([rb]), pa_schema)
             for lo, hi in zip([0, *cut], [*cut, rb.num_rows]):
                 u, e = (int(bs[lo]), int(ss[lo])), int(es[lo])
                 if u != unit or e != epoch:

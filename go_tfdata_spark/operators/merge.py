@@ -453,8 +453,8 @@ def _ts_micros(df: DataFrame, col: str = "ts"):
 
 def _lineage_base(changes: DataFrame) -> list[dict]:
     """Per-src-partition offsets + watermark (one cheap map-side-combining
-    aggregate). Winner-op counts stay None — filled either by the merge
-    fold's accumulator (aligned/MOR) or by `_lineage_counts` (sparse)."""
+    aggregate). Winner-op counts stay None — the merge fold's accumulator
+    fills them."""
     rows = (
         changes.groupBy("src_part")
         .agg(
@@ -475,28 +475,6 @@ def _lineage_base(changes: DataFrame) -> list[dict]:
         }
         for r in rows
     ]
-
-
-def _lineage_counts(
-    changes: DataFrame,
-    key_cols: list[str] = list(KEY_COLUMNS),
-    order_cols: list[str] = list(LWW_ORDER_COLUMNS),
-) -> dict:
-    """Winner-op counts per (src_part, deleted) via a PRUNED LWW fold over
-    just (keys, order, op) — the sparse-strategy fallback (Catalyst cannot
-    prune struct fields through max_by, so the fold must never see the
-    payload; for dense batches the counts ride the merge fold instead)."""
-    slim = lww_latest(
-        changes.select(*key_cols, *order_cols, "op"),
-        key_cols=key_cols,
-        order_cols=order_cols,
-    )
-    rows = (
-        slim.groupBy(F.col("src_part"), (F.col("op") == "D").alias("_d"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    return {(int(r["src_part"]), bool(r["_d"])): int(r["n"]) for r in rows}
 
 
 def _fill_lineage(lineage: list[dict], counts: dict) -> None:
@@ -564,9 +542,9 @@ def precompute_epoch_stats(
     return stats
 
 
-# Merge strategies apply_changes and replay accept ("auto" picks one of the
-# two copy-on-write ones per epoch).
-MERGE_STRATEGIES = ("auto", "broadcast", "aligned", "mor")
+# Merge strategies apply_changes and replay accept: the copy-on-write fold
+# ("aligned") and merge-on-read ("mor").
+MERGE_STRATEGIES = ("aligned", "mor")
 
 # Epochs per fused chunk in replay() when `fuse_epochs` is not given.
 _FUSE_EPOCHS = 8
@@ -580,27 +558,6 @@ def _check_strategy(merge_strategy: str) -> None:
         )
 
 
-def _resolve_strategy(merge_strategy: str, batch_events: int | None) -> str:
-    """Resolve 'auto': sparse batches (key set small enough to BROADCAST)
-    -> passthrough merge (target rows never shuffle); dense batches -> the
-    aligned Arrow merge (ONE payload shuffle straight onto the write
-    layout). Gated on the estimated broadcast BYTES, not a row count: the
-    hint is honored unconditionally by Spark, so the gate must bound driver
-    memory. Raw event count is a (conservative) upper bound on the
-    distinct-key count and comes free from the offsets aggregate."""
-    if merge_strategy != "auto":
-        return merge_strategy
-    from go_tfdata_spark.lake.table import _BROADCAST_MAX_BYTES
-
-    est_key_bytes = 96  # conv_id string + turn_idx int, pessimistic
-    return (
-        "broadcast"
-        if (batch_events is not None
-            and batch_events * est_key_bytes <= _BROADCAST_MAX_BYTES)
-        else "aligned"
-    )
-
-
 def apply_changes(
     table: LakeTable,
     changes: DataFrame,
@@ -608,35 +565,33 @@ def apply_changes(
     epoch: int,
     key_cols: list[str] = list(KEY_COLUMNS),
     order_cols: list[str] = list(LWW_ORDER_COLUMNS),
-    salt_buckets: int | None = None,
     evolve_schema: bool = True,
     collect_lineage: bool = True,
-    merge_strategy: str = "auto",
+    merge_strategy: str = "aligned",
     precomputed: dict | None = None,
     auto_compact_deltas: int | None = None,
 ) -> ApplyResult:
     """Apply one change batch (micro-batch epoch or replay chunk) to `table`.
 
-    Steps: ledger check -> additive schema evolution -> LWW fold (+ optional
-    hot-key salting) -> tombstone fold -> order-conditional MERGE, with
-    lineage embedded in the atomic commit.
+    Steps: ledger check -> additive schema evolution -> LWW fold +
+    tombstone fold -> order-conditional MERGE, with lineage embedded in the
+    atomic commit.
 
     `merge_strategy` is one of MERGE_STRATEGIES; any other value raises
-    ValueError before any work. The three physical paths:
+    ValueError before any work. Both run the one Arrow fold on the
+    table's write layout, over physical-shape rows:
 
-    - "broadcast" (sparse batches): the batch is folded first
-      (`fold_changes`, salted by `salt_buckets`) and merged by
-      `LakeTable.merge_lww`'s broadcast passthrough;
-    - "aligned" (dense batches): physical-shape rows fold straight onto
-      the write layout with the carried target rows, as a one-epoch chunk
-      of `LakeTable.merge_aligned_fused` — the same fold a fused replay
-      chunk runs;
+    - "aligned" (copy-on-write, the default): the batch folds with the
+      carried target rows as a one-epoch chunk of
+      `LakeTable.merge_aligned_fused` — the same fold a fused replay chunk
+      runs. Only the (bucket, split) units holding batch rows are
+      rewritten, however small the batch; hot keys spread over a bucket's
+      splits, which hash the full key. An empty batch publishes a version
+      with an unchanged file set, so its ledger entry still commits;
     - "mor" (merge-on-read): the same fold with no carried files writes the
       batch winners as delta files, published by `append_delta`.
 
-    "auto" picks broadcast or aligned by the batch's size (see
-    `_resolve_strategy`). On the two fold paths the lineage winner-op
-    counts ride the fold through an accumulator.
+    The lineage winner-op counts ride the fold through an accumulator.
 
     `auto_compact_deltas` (opt-in, MOR only): after the delta commit, any
     bucket holding >= that many delta FILES (each MOR epoch adds up to
@@ -664,50 +619,24 @@ def apply_changes(
         lineage = _lineage_base(changes) if collect_lineage else []
         affected = None
     summary = {"job_id": job_id, "epoch": int(epoch), "lineage": lineage}
-    batch_events = (
-        sum(r["offsets_applied"] for r in lineage) if lineage else None
-    )
-    strategy = _resolve_strategy(merge_strategy, batch_events)
-    # Winner-op counts (rows_upserted/deleted): on the fold paths they ride
-    # the merge fold via an accumulator (no extra scan/shuffle); the sparse
-    # path runs the cheap slim fold up front.
-    needs_counts = bool(lineage) and any(
-        ln["rows_upserted"] is None for ln in lineage
-    )
+    # Winner-op counts (rows_upserted/deleted) ride the merge fold via an
+    # accumulator (no extra scan/shuffle).
     acc = None
-    if needs_counts and strategy in ("aligned", "mor"):
+    if any(ln["rows_upserted"] is None for ln in lineage):
         acc = lineage_accumulator(table.spark)
-    elif needs_counts:
-        _fill_lineage(lineage, _lineage_counts(changes, key_cols, order_cols))
 
     def finalize(m):  # noqa: ANN001
         if acc is not None:
             _fill_lineage(lineage, fold_lineage_counts_epoch(acc.value, epoch))
 
     phys_order = ["ts", "_lsn", "_src_part"]
-    if strategy == "broadcast":
-        # The fold output feeds bucket discovery and the merge write;
-        # deliberately NOT persisted: caching wide text rows deserialized
-        # costs ~10x the fold itself (object+GC churn) and Catalyst
-        # column-prunes the recomputations.
-        folded = fold_changes(changes, key_cols, order_cols, salt_buckets)
-        m = table.merge_lww(
-            folded,
-            key_cols=key_cols,
-            order_cols=phys_order,
-            summary=summary,
-            affected=affected,
-            source_rows=batch_events,
-        )
-        return ApplyResult(job_id, epoch, skipped=False, version=m.version,
-                           lineage=lineage)
-    # No separate batch fold on the fold paths: physical-shape rows
-    # (tombstones pre-nulled — commutes with the fold, see physical_rows)
-    # fold once on the write layout, as a one-epoch chunk.
+    # No separate batch fold: physical-shape rows (tombstones pre-nulled —
+    # commutes with the fold, see physical_rows) fold once on the write
+    # layout, as a one-epoch chunk.
     rows = physical_rows(changes, key_cols).withColumn(
         "epoch", F.lit(int(epoch))
     )
-    if strategy == "aligned":
+    if merge_strategy == "aligned":
         [m] = table.merge_aligned_fused(
             rows,
             epoch_col="epoch",
@@ -761,7 +690,7 @@ def apply_changes_fused(
     evolve_schema: bool = True,
     collect_lineage: bool = True,
 ) -> list[ApplyResult]:
-    """Apply a CHUNK of consecutive uncommitted dense epochs as ONE fold
+    """Apply a CHUNK of consecutive uncommitted epochs as ONE fold
     job (see LakeTable.merge_aligned_fused): one scan + one shuffle for
     the chunk, the carried winner state read once and held in-worker, one
     atomic ledger-carrying commit per epoch. Semantically identical to
@@ -839,23 +768,23 @@ def replay(
     up-front job (`precompute_epoch_stats`); each epoch then costs exactly
     one merge-write job plus a manifest commit.
 
-    `merge_strategy` (in `apply_kwargs`) is validated before any work, as
-    in `apply_changes`. Epochs that resolve to the aligned strategy apply
-    in FUSED chunks of up to `fuse_epochs` (default 8) consecutive
-    uncommitted epochs, one fold job per chunk (`apply_changes_fused`) —
+    `merge_strategy` (in `apply_kwargs`, default "aligned") is validated
+    before any work, as in `apply_changes`. Under "aligned", uncommitted
+    epochs apply in FUSED chunks of up to `fuse_epochs` (default 8)
+    consecutive epochs, one fold job per chunk (`apply_changes_fused`) —
     one scan + one shuffle + one carried-state read per chunk instead of
     per epoch, with the identical per-epoch manifests/ledger/lineage. A
     chunk of one runs the same fold, so `fuse_epochs=1` only shortens the
-    chunks. Sparse (broadcast), merge-on-read and already-committed epochs
-    break chunks and go through `apply_changes` one by one. Crash recovery
-    granularity is the chunk: a kill mid-chunk commits the published prefix
-    and the ledger re-runs only the remainder.
+    chunks. Merge-on-read and already-committed epochs break chunks and go
+    through `apply_changes` one by one. Crash recovery granularity is the
+    chunk: a kill mid-chunk commits the published prefix and the ledger
+    re-runs only the remainder.
     """
     import os as _os
     import sys as _sys
     import time as _time
 
-    merge_strategy = apply_kwargs.get("merge_strategy", "auto")
+    merge_strategy = apply_kwargs.get("merge_strategy", "aligned")
     _check_strategy(merge_strategy)
     _timing = _os.environ.get("SPARK_GRAFT_TIMING") == "1"
     _t0 = _time.time()
@@ -925,13 +854,8 @@ def replay(
         run = []
 
     for e in epochs:
-        lineage = stats[e].get("lineage", [])
-        batch_events = (
-            sum(r["offsets_applied"] for r in lineage) if lineage else None
-        )
         fusable = (
-            not table.is_committed(job_id, int(e))
-            and _resolve_strategy(merge_strategy, batch_events) == "aligned"
+            merge_strategy != "mor" and not table.is_committed(job_id, int(e))
         )
         if fusable:
             run.append(e)

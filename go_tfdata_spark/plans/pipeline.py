@@ -20,6 +20,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 Stage = Callable[[DataFrame], DataFrame]
 
@@ -67,7 +68,17 @@ class Pipeline:
         return self
 
     def to_lake_merge(self, table, key_cols, order_cols, summary=None) -> "Pipeline":
-        self._sink = lambda df: table.merge_lww(df, key_cols, order_cols, summary)
+        """Sink: order-conditional MERGE into a LakeTable — per key, the row
+        with the greater `order_cols` wins — as a one-epoch chunk of the
+        table's copy-on-write fold. Returns the committed Manifest."""
+        self._sink = lambda df: table.merge_aligned_fused(
+            df.withColumn("_epoch", F.lit(0)),
+            epoch_col="_epoch",
+            summaries={0: summary or {}},
+            key_cols=key_cols,
+            order_cols=order_cols,
+            affected_by_epoch={0: None},
+        )[0]
         return self
 
     # ------------------------------------------------------------ execution

@@ -352,18 +352,16 @@ def register_change_feed(spark) -> None:
     py-files/archives rather than a cluster-wide install. The module is
     stdlib+pyspark-only (see `_ledger_contains`) apart from
     `go_tfdata_spark.worker`, which is stdlib-only and shipped by value
-    too, so by-value is cheap and total."""
-    try:
-        import sys
+    too, so by-value is cheap and total. A failed registration raises
+    here, not later as a `ModuleNotFoundError` in the planner process."""
+    import sys
 
-        from pyspark import cloudpickle
+    from pyspark import cloudpickle
 
-        from go_tfdata_spark import worker
+    from go_tfdata_spark import worker
 
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-        cloudpickle.register_pickle_by_value(worker)
-    except Exception:
-        pass  # older cloudpickle: fall back to by-reference (in-process ok)
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(worker)
     spark.dataSource.register(ChangeFeedDataSource)
 
 

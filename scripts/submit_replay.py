@@ -51,7 +51,7 @@ def main() -> None:
     p.add_argument("--create", action="store_true",
                    help="create the table if absent (idempotent across resubmits)")
     p.add_argument("--num-buckets", type=int, default=16)
-    p.add_argument("--merge-strategy", default="auto")
+    p.add_argument("--merge-strategy", default="aligned")
     p.add_argument("--stream", action="store_true",
                    help="Structured Streaming ingest (readStream + foreachBatch) "
                         "instead of batch replay; requires --checkpoint")

@@ -137,6 +137,22 @@ def test_ledger_contains_copies_agree():
     assert list(fd._ORDER) == ["ts"] + list(M.META_COLUMNS[:2])
 
 
+def test_register_change_feed_raises_on_pickle_failure(spark, monkeypatch):
+    """A failed by-value registration surfaces from register_change_feed
+    itself, not later as an import error in the data-source planner
+    process."""
+    from pyspark import cloudpickle
+
+    from go_tfdata_spark.streaming.feed import register_change_feed
+
+    def refuse(module):
+        raise RuntimeError(f"cannot pickle {module.__name__} by value")
+
+    monkeypatch.setattr(cloudpickle, "register_pickle_by_value", refuse)
+    with pytest.raises(RuntimeError, match="by value"):
+        register_change_feed(spark)
+
+
 def test_range_feed_validation(replayed):
     with pytest.raises(ValueError, match="empty epoch range"):
         table_changes_range(replayed, "j", 2, 1)

@@ -85,13 +85,26 @@ def test_schema_evolution_additive(spark, tmp_path):
     assert t.current_version() == v
 
 
+def _merge(t, src, key_cols, order_cols):
+    """Order-conditional MERGE of `src` as a one-epoch chunk of the fold."""
+    [m] = t.merge_aligned_fused(
+        src.withColumn("_epoch", F.lit(0)),
+        epoch_col="_epoch",
+        summaries={0: {}},
+        key_cols=key_cols,
+        order_cols=order_cols,
+        affected_by_epoch={0: None},
+    )
+    return m
+
+
 def test_merge_lww_conditional(spark, tmp_path):
     """Late (older-order) source rows must not overwrite newer target rows."""
     phys = T.StructType(SCHEMA.fields + [T.StructField("v", T.LongType(), True)])
     t = LakeTable.create(spark, str(tmp_path / "m"), phys, num_buckets=4)
     t.append(spark.createDataFrame([("a", 1, "new", 10), ("b", 2, "old", 1)], phys))
     src = spark.createDataFrame([("a", 1, "stale", 5), ("b", 2, "fresh", 7), ("c", 3, "ins", 2)], phys)
-    t.merge_lww(src, key_cols=["conv_id", "turn_idx"], order_cols=["v"])
+    _merge(t, src, key_cols=["conv_id", "turn_idx"], order_cols=["v"])
     got = {(r.conv_id, r.turn_idx): (r.text, r.v) for r in t.read().collect()}
     assert got == {("a", 1): ("new", 10), ("b", 2): ("fresh", 7), ("c", 3): ("ins", 2)}
 
@@ -102,7 +115,7 @@ def test_merge_rewrites_only_affected_buckets(spark, tmp_path):
     t.append(spark.createDataFrame(rows, SCHEMA))
     before = {f["path"]: f["bucket"] for f in t.snapshot().files}
     phys_src = spark.createDataFrame([("c1", 1, "updated")], SCHEMA)
-    t.merge_lww(phys_src, key_cols=["conv_id", "turn_idx"], order_cols=["text"])
+    _merge(t, phys_src, key_cols=["conv_id", "turn_idx"], order_cols=["text"])
     after = t.snapshot()
     touched = set(after.summary["affected_buckets"])
     assert len(touched) == 1
@@ -113,10 +126,15 @@ def test_merge_rewrites_only_affected_buckets(spark, tmp_path):
 
 
 def test_empty_merge_is_noop(spark, tmp_path):
+    """An empty source commits a version (it may carry a ledger entry) but
+    leaves the file set and the rows exactly as they were."""
     t = _mk(spark, tmp_path)
-    v = t.current_version()
-    t.merge_lww(spark.createDataFrame([], SCHEMA), ["conv_id", "turn_idx"], ["text"])
-    assert t.current_version() == v
+    t.append(spark.createDataFrame([("a", 1, "x"), ("b", 2, "y")], SCHEMA))
+    files = t.snapshot().files
+    rows = sorted(t.read().collect())
+    _merge(t, spark.createDataFrame([], SCHEMA), ["conv_id", "turn_idx"], ["text"])
+    assert t.snapshot().files == files
+    assert sorted(t.read().collect()) == rows
 
 
 def test_compaction_preserves_rows_and_reduces_files(spark, tmp_path):

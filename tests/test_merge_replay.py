@@ -49,8 +49,20 @@ def test_replay_matches_oracle(spark, tmp_path, kwargs, name):
 
 
 def test_replay_with_salting_matches_oracle(spark, tmp_path):
+    """Hot conv_ids on the write path: the fold spreads one conv_id's turns
+    over its bucket's splits (split_expr hashes the full key), so the
+    hottest conv_id lands in more than one (bucket, split) file."""
     changes = synthetic_changes(spark, n_events=3000, skew=4.0, n_convs=5, seed=7)
-    _roundtrip(spark, tmp_path, changes, "salted", salt_buckets=8)
+    table, _ = _roundtrip(spark, tmp_path, changes, "salted")
+    hot = changes.groupBy("conv_id").count().orderBy(F.desc("count")).first()
+    files = (
+        table.read(resolve=False)
+        .filter(F.col("conv_id") == hot.conv_id)
+        .select(F.input_file_name())
+        .distinct()
+        .count()
+    )
+    assert files > 1
 
 
 def test_lww_tie_breaks_deterministically(spark, tmp_path):
@@ -134,9 +146,8 @@ def test_lineage_metrics(spark, tmp_path):
 @pytest.mark.parametrize("strategy", ["aligned", "mor"])
 def test_lineage_counts_ride_the_merge_fold(spark, tmp_path, strategy):
     """rows_upserted/rows_deleted come from the merge fold's accumulator on
-    the dense strategies — they must equal the per-(epoch, src_part)
-    winner-op counts of an independent pandas fold (the broadcast path's
-    slim-fold fallback is covered by test_lineage_metrics)."""
+    both strategies — they must equal the per-(epoch, src_part)
+    winner-op counts of an independent pandas fold."""
     changes = synthetic_changes(spark, n_events=1500, n_epochs=2,
                                 delete_frac=0.2, n_src_parts=3, seed=21)
     table = create_transcripts_table(
@@ -249,7 +260,7 @@ def test_mor_auto_compaction_50_epoch_read_amplification(spark, tmp_path):
     assert_final_state_equal(read_table(table), oracle)
 
 
-@pytest.mark.parametrize("cow", ["broadcast", "aligned"])
+@pytest.mark.parametrize("cow", ["aligned"])
 def test_mixed_mor_then_cow(spark, tmp_path, cow):
     changes = synthetic_changes(spark, n_events=1500, n_epochs=3, delete_frac=0.1, seed=11)
     table = create_transcripts_table(spark, str(tmp_path / "mix"), TRANSCRIPTS_SCHEMA, num_buckets=4)
@@ -359,17 +370,66 @@ def test_parallel_mor_replay_matches_oracle(spark, tmp_path):
 
 def test_unknown_merge_strategy_fails_fast(spark, tmp_path):
     """A strategy name outside MERGE_STRATEGIES raises before any work and
-    commits no version — it must not silently run another merge."""
+    commits no version — it must not silently run another merge. That
+    covers the retired "shuffle", "broadcast" and "auto"."""
     table = create_transcripts_table(spark, str(tmp_path / "unk"), TRANSCRIPTS_SCHEMA, num_buckets=2)
     changes = synthetic_changes(spark, n_events=200, n_epochs=2, seed=3)
     v = table.current_version()
-    with pytest.raises(ValueError, match="merge_strategy"):
-        apply_changes(table, changes.filter("epoch = 0"), job_id="j", epoch=0,
-                      merge_strategy="shuffle")
-    with pytest.raises(ValueError, match="merge_strategy"):
-        replay(table, changes, job_id="j", merge_strategy="shuffle")
-    assert table.current_version() == v
-    assert table.committed_epochs("j") == set()
+    for strategy in ("shuffle", "broadcast", "auto"):
+        with pytest.raises(ValueError, match="merge_strategy"):
+            apply_changes(table, changes.filter("epoch = 0"), job_id="j",
+                          epoch=0, merge_strategy=strategy)
+        with pytest.raises(ValueError, match="merge_strategy"):
+            replay(table, changes, job_id="j", merge_strategy=strategy)
+        assert table.current_version() == v
+        assert table.committed_epochs("j") == set()
+
+
+def test_microbatch_stream_keeps_live_files_bounded(spark, tmp_path):
+    """A stream of small epochs applied at the default strategy rewrites
+    only the (bucket, split) units its rows touch, so the live file count
+    never exceeds one file per unit, and the state matches the oracle."""
+    nb, base_events, n_epochs, per_epoch = 8, 4000, 20, 100
+    changes = synthetic_changes(
+        spark, n_events=base_events + n_epochs * per_epoch, n_convs=500,
+        n_epochs=1, delete_frac=0.1, late_frac=0.2, seed=53,
+    ).withColumn("epoch", F.when(
+        F.col("lsn") < base_events, F.lit(0)
+    ).otherwise(
+        ((F.col("lsn") - base_events) / per_epoch).cast("int") + 1
+    ))
+    table = create_transcripts_table(
+        spark, str(tmp_path / "mb"), TRANSCRIPTS_SCHEMA, num_buckets=nb)
+    apply_changes(table, changes.filter("epoch = 0"), job_id="j", epoch=0)
+    assert read_table(table).count() > 2000
+    for e in range(1, n_epochs + 1):
+        apply_changes(table, changes.filter(F.col("epoch") == e), job_id="j",
+                      epoch=e)
+        assert len(table.snapshot().files) <= nb * 4, f"epoch {e}"
+    assert table.committed_epochs("j") == set(range(n_epochs + 1))
+    oracle = sequential_apply(changes.toPandas(), PAYLOAD)
+    assert_final_state_equal(read_table(table), oracle)
+
+
+def test_aligned_merge_under_non_utc_session_timezone(spark, tmp_path):
+    """Spark hands the fold its batch timestamps tagged with the session
+    timezone, while carried files read back as UTC. Epochs that fold onto
+    carried files under a non-UTC session must still match the oracle."""
+    changes = synthetic_changes(spark, n_events=1200, n_epochs=3,
+                                delete_frac=0.1, late_frac=0.2, seed=57)
+    table = create_transcripts_table(
+        spark, str(tmp_path / "tz"), TRANSCRIPTS_SCHEMA, num_buckets=2)
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        for e in range(3):
+            apply_changes(table, changes.filter(F.col("epoch") == e),
+                          job_id="j", epoch=e)
+    finally:
+        spark.conf.set(key, old)
+    oracle = sequential_apply(changes.toPandas(), PAYLOAD)
+    assert_final_state_equal(read_table(table), oracle)
 
 
 def test_invalid_batch_fails_fast(spark, tmp_path):
@@ -379,34 +439,6 @@ def test_invalid_batch_fails_fast(spark, tmp_path):
     bad = spark.createDataFrame([("c1", 0)], "conv_id string, turn_idx int")
     with pytest.raises(ValueError, match="missing required columns"):
         apply_changes(table, bad, job_id="j", epoch=0)
-
-
-def test_auto_strategy_dense_batch_goes_aligned(spark, tmp_path):
-    """A batch whose key set exceeds the broadcast byte budget must take the
-    aligned one-shuffle merge — no forced driver broadcast at scale."""
-    from go_tfdata_spark.operators.merge import apply_changes
-
-    table = create_transcripts_table(
-        spark, str(tmp_path / "dense"), TRANSCRIPTS_SCHEMA, num_buckets=8
-    )
-    changes = synthetic_changes(spark, seed=7, n_events=200, n_epochs=1)
-    huge = [{"src_part": 0, "offsets_applied": 10**7, "rows_upserted": 10**7,
-             "rows_deleted": 0, "watermark": None}]
-    r = apply_changes(
-        table, changes, job_id="dense", epoch=0,
-        precomputed={"lineage": huge, "affected": None},
-    )
-    assert not r.skipped
-    assert table.snapshot().summary["merge_strategy"] == "aligned"
-    # and a genuinely sparse batch still picks broadcast
-    changes2 = synthetic_changes(spark, seed=8, n_events=200, n_epochs=1)
-    small = [{"src_part": 0, "offsets_applied": 200, "rows_upserted": 150,
-              "rows_deleted": 0, "watermark": None}]
-    apply_changes(
-        table, changes2, job_id="dense", epoch=1,
-        precomputed={"lineage": small, "affected": None},
-    )
-    assert table.snapshot().summary["merge_strategy"] == "broadcast"
 
 
 @pytest.mark.parametrize(
@@ -662,22 +694,6 @@ def test_fused_replay_resumes_mid_chunk(spark, tmp_path):
                      merge_strategy="aligned")
     assert [r.epoch for r in results if r.skipped] == [0, 1]
     assert [r.epoch for r in results if not r.skipped] == [2, 3, 4]
-    oracle = sequential_apply(changes.toPandas(), PAYLOAD)
-    assert_final_state_equal(read_table(table), oracle)
-
-
-def test_fused_chunk_breaks_on_sparse_epoch(spark, tmp_path):
-    """Under merge_strategy='auto' small epochs resolve to the broadcast
-    path and must BREAK fused runs (fused is the dense path only); the
-    result is still oracle-identical."""
-    changes = synthetic_changes(
-        spark, n_events=2500, n_epochs=4, delete_frac=0.1, late_frac=0.2,
-        seed=19,
-    )
-    table = create_transcripts_table(
-        spark, str(tmp_path / "t"), TRANSCRIPTS_SCHEMA, num_buckets=4)
-    results = replay(table, changes, job_id="j", fuse_epochs=4)  # auto
-    assert [r.epoch for r in results] == [0, 1, 2, 3]
     oracle = sequential_apply(changes.toPandas(), PAYLOAD)
     assert_final_state_equal(read_table(table), oracle)
 
