@@ -4,18 +4,26 @@ Exact, shingle-Jaccard, MinHash+LSH, SimHash, and embedding-cosine
 near-dup — each designed for the 100 TB shape:
 
 - exact dedup is a hash aggregation on a fingerprint (map-side combine);
-- Jaccard avoids the O(n^2) cross join by exploding shingles and joining
-  on shingle (only docs sharing at least one shingle ever meet);
-- MinHash+LSH buckets by band signature so candidate generation is a
-  groupBy, not a join of everything with everything;
-- SimHash reduces each doc to one `bits`-bit key; near-dup candidates
-  share at least one rotation band of the key (pigeonhole over
-  max_hamming+1 bands), verified with bit_count on the XOR;
-- candidate PAIRS resolve to transitive CLUSTERS (connected components by
-  pointer-jumped min-label propagation) with one canonical doc kept per
-  cluster;
+- Jaccard avoids the O(n^2) cross join by grouping docs per shingle (only
+  docs sharing at least one shingle ever meet) and counting pairs in a
+  numpy kernel;
+- MinHash+LSH and SimHash both band a per-doc key and pair docs only
+  inside equal (band, band value) buckets: one shuffle and one Arrow
+  kernel (`_banded_pairs`) form each bucket's pairs and verify them in
+  place (signature agreement; bit_count of the XOR, complete by
+  pigeonhole over max_hamming+1 bands), with no self-join, `distinct` or
+  cache;
+- candidate PAIRS resolve to transitive CLUSTERS (connected components:
+  one numpy labelling task when the edge set fits one partition,
+  pointer-jumped min-label propagation rounds otherwise) with one
+  canonical doc kept per cluster;
 - embedding near-dup offers brute-force (baseline, quadratic) and a
   random-hyperplane-bucketed variant (the scale path).
+
+A corpus pass is bound by its Spark job count, not by its kernels (one
+job costs ~0.1 s of fixed work on a 4-vCPU box): the near-dup operators
+are lazy — building one runs no job — except the generic-id branch of
+`shingle_jaccard_pairs` (one pin) and `cluster_dups` (its labelling).
 
 All hashes are engine-agnostic (md5 / polynomial rolling hash) so DuckDB
 oracles can restate them exactly.
@@ -33,7 +41,7 @@ from go_tfdata_spark.worker import release_zip_finders
 _MERSENNE = 2**31 - 1
 
 # Narrow intermediates persisted by the multi-consumer pipelines below
-# (exploded shingles, minhash signatures). Their consumers are lazy, so the
+# (the generic-id shingle groups). Their consumers are lazy, so the
 # operator cannot unpersist before returning; instead the registry keeps the
 # `_MAX_LIVE_CACHES` most recent invocations' caches and evicts older ones,
 # so a long-lived session's cached footprint stays bounded WITHOUT yanking
@@ -274,9 +282,15 @@ def shingle_jaccard_pairs(
     """Exact word-n-gram Jaccard similarity for all document pairs sharing
     >=1 shingle, filtered to jaccard >= threshold, id_a < id_b.
 
-    Plan shape: explode distinct shingles -> self-join on shingle (docs
-    that share nothing never meet) -> count intersections -> jaccard from
-    |A|,|B|,|A∩B|. Shuffles are keyed by shingle then by pair.
+    Plan shape: explode distinct shingles -> group the docs per shingle
+    (docs that share nothing never meet) -> count intersections ->
+    jaccard from |A|,|B|,|A∩B|. Integral ids (the fast path) take two
+    more shuffles and two numpy kernels: one keyed by doc counts each
+    doc's pairs and sizes, one keyed by the pair's second doc looks up
+    its size and filters on jaccard (float64, as Spark's `/`). That path
+    is lazy: building it runs no job and caches nothing. Other id types
+    expand the pairs in the JVM over a cached, eagerly pinned copy of the
+    shingle groups (one job at build time).
 
     `max_doc_freq` is the stop-shingle cap — the scale knob: a shingle
     appearing in d documents contributes d^2 join rows, so one stop-shingle
@@ -301,9 +315,7 @@ def shingle_jaccard_pairs(
     # once, the shingle string never crosses another exchange, and the pair
     # multiset is provably identical (each shingle group of d docs emits
     # the same d*(d-1)/2 value-ordered pairs the self-join produced, and
-    # the doc-freq cap is the group size). The grouped (docs-array) rows
-    # feed both the pair generator and the per-doc sizes, so they are the
-    # narrow intermediate worth caching — ~one row per distinct shingle.
+    # the doc-freq cap is the group size).
     grp = sh.groupBy("sh").agg(F.collect_list("doc").alias("docs"))
     if max_doc_freq is not None:
         grp = grp.filter(F.size("docs") <= max_doc_freq)
@@ -314,8 +326,12 @@ def shingle_jaccard_pairs(
     )
     if not arrow_ids:
         # the generic path consumes grp twice (sizes + pair expansion):
-        # cache the narrow array rows so the explode+groupBy runs once
+        # cache the narrow array rows so the explode+groupBy runs once, and
+        # pin the cache eagerly: AQE submits both consumers' stages at
+        # once, and two scans of an unmaterialized cache each run the whole
+        # child chain side by side (the cache stampede)
         grp = _take_cache(grp)
+        grp.count()
         sizes = grp.select(F.explode("docs").alias("doc")).groupBy("doc").agg(
             F.count("*").alias("sz")
         )
@@ -336,8 +352,8 @@ def shingle_jaccard_pairs(
         # sf1.0/32 cores). Exact-prune before crossing back to the JVM:
         # szb >= inter always, so jaccard <= inter/sz(da); a pair with
         # inter < threshold*sz(da) can never reach the threshold and is
-        # dropped in-worker (the surviving pairs — the only rows the JVM
-        # ever joins — are the near-threshold ones). sz(da) is exact and
+        # dropped in-worker (the surviving pairs — the only pair rows the
+        # second shuffle moves — are the near-threshold ones). sz(da) is exact and
         # partition-local: every group containing da contributes exactly
         # one posexplode row, all hashed to da's partition.
         thr = float(threshold)
@@ -364,7 +380,7 @@ def shingle_jaccard_pairs(
             # per-doc capped-universe sizes, exact and partition-complete
             # (every group containing a doc contributes one posexplode row,
             # all hashed here) — emitted as id_b=NULL sentinel rows so the
-            # downstream sz_b join needs no separate sizes subtree. Always
+            # downstream sz_b lookup needs no separate sizes subtree. Always
             # emitted, even when this partition produces no pairs: another
             # partition's pairs may reference these docs as id_b.
             ua, ucnt = np.unique(da, return_counts=True)
@@ -423,42 +439,55 @@ def shingle_jaccard_pairs(
         # ONE kernel pass emits both the pruned pair counts (sz_a riding
         # along — it is the exact per-doc capped shingle count, already in
         # hand for the prune) and the per-doc sizes (id_b NULL sentinel
-        # rows). The output is narrow (4 longs) and has two consumers, so
-        # it is the intermediate worth caching; grp then has a single
-        # consumer and needs none.
-        cnt = _take_cache(
+        # rows). One more shuffle brings each pair to its id_b's size row:
+        # pair rows route by id_b, size rows by their doc (id_a), so
+        # coalesce(id_b, id_a) is the doc whose size the row holds or
+        # needs. No cache, no pin, no join: building runs no job.
+        cnt = (
             ex.select("da", "_tail").repartition("da")
             .mapInArrow(_count_pairs, "id_a long, id_b long, inter long, sz_a long")
         )
-        # Materialize the cache EAGERLY before handing it to two consumers.
-        # AQE submits the sizes build stage and the pair probe stage
-        # concurrently, and two scans of a not-yet-materialized cache
-        # STAMPEDE: each recomputes the entire kernel chain (scan, shingler,
-        # collect_list aggregate, repartition, pair kernel) side by side at
-        # half throughput — measured 2x wall on a 100M-pair corpus, and
-        # bimodal (the race is timing-dependent). One cheap count pins the
-        # cache; both consumers then read memory. The extra pass touches
-        # only the cached 4-long rows.
-        cnt.count()
-        sizes_b = cnt.filter(F.col("id_b").isNull()).select(
-            F.col("id_a").cast(id_type).alias("id_b"),
-            F.col("sz_a").alias("sz_b"),
-        )
-        pairs = cnt.filter(F.col("id_b").isNotNull()).select(
-            F.col("id_a").cast(id_type).alias("id_a"),
-            F.col("id_b").cast(id_type).alias("id_b"),
-            "inter", "sz_a",
-        )
-        out = (
-            pairs.join(sizes_b, "id_b")
-            .withColumn(
-                "jaccard",
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
+
+        def _jaccard(batches):
+            release_zip_finders()
+            import numpy as np
+            import pyarrow as pa
+            import pyarrow.compute as pc
+
+            batches = list(batches)
+            if not batches:
+                return
+            tbl = pa.Table.from_batches(batches)
+            # split off the size rows BEFORE leaving Arrow: a column with
+            # NULLs converts to float64 (NaN), which would round ids > 2^53
+            size_row = tbl.column(1).is_null()
+            sizes = tbl.filter(size_row)
+            docs, sz = (sizes.column(c).to_numpy() for c in (0, 3))
+            order = np.argsort(docs)
+            docs, sz = docs[order], sz[order]
+            id_a, id_b, inter, sz_a = (
+                tbl.filter(pc.invert(size_row)).column(c).to_numpy() for c in range(4)
             )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
+            sz_b = sz[np.searchsorted(docs, id_b)]
+            # float64 division of the long counts, as Spark's `/`
+            jac = inter.astype(np.float64) / (sz_a + sz_b - inter).astype(np.float64)
+            sel = np.flatnonzero(jac >= thr)
+            for s in range(0, len(sel), _PAIR_BATCH_ROWS):
+                part = sel[s:s + _PAIR_BATCH_ROWS]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(id_a[part]), pa.array(id_b[part]), pa.array(jac[part])],
+                    names=["id_a", "id_b", "jaccard"],
+                )
+
+        return (
+            cnt.repartition(F.coalesce("id_b", "id_a"))
+            .mapInArrow(_jaccard, "id_a long, id_b long, jaccard double")
+            .select(
+                F.col("id_a").cast(id_type).alias("id_a"),
+                F.col("id_b").cast(id_type).alias("id_b"),
+                "jaccard",
+            )
         )
-        return out
     # generic ids: expand in the JVM and hash-aggregate per pair
     pairs = (
         ex.select("da", F.explode("_tail").alias("db"))
@@ -658,6 +687,108 @@ def minhash_signatures(
     return work.mapInArrow(kernel, out_schema)
 
 
+def _band_hashes(sig_col: str, bands: int, sig_len: int):
+    """array<int> of the per-band LSH keys: band i is F.hash of signature
+    slots [i*r, (i+1)*r), r = sig_len // bands (trailing slots unused)."""
+    r = sig_len // bands
+    return F.array(*[F.hash(F.slice(F.col(sig_col), i * r + 1, r)) for i in range(bands)])
+
+
+# Rows per batch a pair kernel yields: a hot bucket's pairs stream out in
+# slices of this size instead of being held at once.
+_PAIR_BATCH_ROWS = 1 << 16
+
+
+def _banded_pairs(banded: DataFrame, load, judge, score_field) -> DataFrame:
+    """Verified near-dup pairs from banded rows in ONE shuffle and ONE
+    Arrow kernel.
+
+    `banded` holds one row per (doc, band): (id, band, bv, *payload), where
+    `bv` is the doc's key in that band. The rows are hash-partitioned on
+    (band, bv), so every bucket is whole in one task. The kernel sorts the
+    task's rows by (band, bv, id) and forms the value-ordered pairs
+    id_a < id_b inside each equal-key run, diagonal by diagonal (pairs k
+    apart, k = 1, 2, ...), so candidates never outnumber the task's rows
+    plus one output slice. `load(table)` turns the payload columns into
+    numpy arrays aligned with the table's rows; `judge(payload, i, j, band)`
+    gets row indices of candidate pairs and the band they met in, and
+    returns (keep mask, score). It must keep a pair only in the LOWEST band
+    on which the two payloads agree, so a pair that collides in several
+    bands is emitted once and no `distinct` is needed. NULL ids never pair
+    (as `a.id < b.id` is NULL in SQL). Output: (id_a, id_b, score_field)."""
+    id_type = banded.schema.fields[0].dataType
+    names = ["id_a", "id_b", score_field.name]
+
+    def kernel(batches):
+        release_zip_finders()
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        batches = list(batches)
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches)
+        tbl = tbl.filter(pc.is_valid(tbl.column(0))).combine_chunks()
+        n = tbl.num_rows
+        if n < 2:
+            return
+        ids = tbl.column(0).chunk(0)
+        # equal ids share a rank; rank order is Arrow's (bytewise for strings)
+        key = pc.rank(ids, sort_keys="ascending", tiebreaker="dense").to_numpy().astype(np.int64)
+        band = tbl.column(1).to_numpy().astype(np.int64, copy=False)
+        bv = tbl.column(2).to_numpy().astype(np.int64, copy=False)
+        payload = load(tbl)
+        order = np.lexsort((key, bv, band))
+        key_s, band_s, bv_s = key[order], band[order], bv[order]
+        new = np.empty(n, dtype=bool)
+        new[0] = True
+        np.not_equal(band_s[1:], band_s[:-1], out=new[1:])
+        new[1:] |= bv_s[1:] != bv_s[:-1]
+        starts = np.flatnonzero(new)
+        run = np.cumsum(new) - 1
+        # rows after each row inside its run
+        rest = np.append(starts[1:], n)[run] - np.arange(n) - 1
+        active = np.flatnonzero(rest > 0)
+
+        def verified(ci, cj, cb):
+            i, j = np.concatenate(ci), np.concatenate(cj)
+            keep, score = judge(payload, i, j, np.concatenate(cb))
+            sel = np.flatnonzero(keep)
+            for s in range(0, len(sel), _PAIR_BATCH_ROWS):
+                part = sel[s:s + _PAIR_BATCH_ROWS]
+                yield pa.RecordBatch.from_arrays(
+                    [ids.take(pa.array(i[part])), ids.take(pa.array(j[part])),
+                     pa.array(score[part])],
+                    names=names,
+                )
+
+        ci, cj, cb, pending = [], [], [], 0
+        k = 1
+        while len(active):
+            p = active
+            q = p + k
+            ok = key_s[p] < key_s[q]  # duplicate ids sort adjacent; never pair
+            ci.append(order[p[ok]])
+            cj.append(order[q[ok]])
+            cb.append(band_s[p[ok]])
+            pending += int(ok.sum())
+            if pending >= _PAIR_BATCH_ROWS:
+                yield from verified(ci, cj, cb)
+                ci, cj, cb, pending = [], [], [], 0
+            k += 1
+            active = active[rest[active] >= k]
+        if pending:
+            yield from verified(ci, cj, cb)
+
+    out_schema = T.StructType([
+        T.StructField("id_a", id_type, False),
+        T.StructField("id_b", id_type, False),
+        score_field,
+    ])
+    return banded.repartition("band", "bv").mapInArrow(kernel, out_schema)
+
+
 def lsh_candidate_pairs(
     sig_df: DataFrame,
     id_col: str,
@@ -674,21 +805,10 @@ def lsh_candidate_pairs(
     transformation — Spark's array type does not carry a length, and a
     driver probe here would put a job inside any caller's loop.
     """
-    rows_per_band = sig_len // bands
     banded = sig_df.select(
         F.col(id_col).alias("doc"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.hash(F.slice(F.col(sig_col), i * rows_per_band + 1, rows_per_band)).alias("bh"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", "bb.band", "bb.bh")
+        F.posexplode(_band_hashes(sig_col, bands, sig_len)).alias("band", "bh"),
+    )
     pairs = (
         banded.alias("a")
         .join(banded.alias("b"), ["band", "bh"])
@@ -711,32 +831,53 @@ def minhash_near_dups(
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures -> banded candidate
     pairs -> estimated jaccard (signature agreement) >= threshold.
+    Output: (id_a, id_b, est_jaccard), id_a < id_b.
 
-    The signatures DataFrame feeds three consumers (both sides of the
-    banded self-join plus the agreement join); it is persisted so the
-    shingle explode + 16-hash fold — the expensive part — runs once, not
-    three times. The cached rows are NARROW (id + num_hashes longs), the
-    shape where caching wins (wide deserialized text rows would cost ~10x
-    the recompute)."""
-    sigs = _take_cache(minhash_signatures(df, id_col, text_col, num_hashes, n, seed))
-    # Eagerly pin the cache: AQE submits the band stages and both
-    # agreement-join sides concurrently, and scans of a not-yet-
-    # materialized cache stampede — event logs showed FOUR concurrent
-    # copies of the signature kernel. persist() alone is not a barrier.
-    sigs.count()
-    cands = lsh_candidate_pairs(sigs, id_col, bands, sig_len=num_hashes)
-    a = sigs.withColumnsRenamed({id_col: "id_a", "sig": "sig_a"})
-    b = sigs.withColumnsRenamed({id_col: "id_b", "sig": "sig_b"})
-    est = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.lit(num_hashes)
-    return (
-        cands.join(a, "id_a").join(b, "id_b")
-        .withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
+    One shuffle and one pair kernel (`_banded_pairs`): each signature row
+    is exploded to its `bands` (band, band hash) keys, the band hashes
+    being the same `F.hash(slice)` values `lsh_candidate_pairs` joins on,
+    computed in the JVM before the shuffle and carried with the signature.
+    Inside each bucket the kernel pairs the docs, keeps a pair only in the
+    lowest band whose hashes agree, and verifies it in place:
+    est_jaccard = equal slots / num_hashes (float64, as Spark's `/`) >=
+    threshold. A pair with a NULL slot (NULL text) is dropped, as the SQL
+    `zip_with`/`aggregate` estimate is NULL there. Lazy: building it runs
+    no Spark job and caches nothing.
+
+    Duplicate ids: the kernel verifies only ROW pairs that share a bucket.
+    If an id appears on several rows, a pair of its rows that collide in
+    no band is not verified, even when another row pair of the same two
+    ids collided (a join of candidate ids back to the signatures would
+    verify every row combination). With unique ids the two are the same."""
+    sigs = minhash_signatures(df, id_col, text_col, num_hashes, n, seed)
+    banded = sigs.select(
+        F.col(id_col), F.col("sig"), _band_hashes("sig", bands, num_hashes).alias("_bhs"),
+    ).select(
+        F.col(id_col), F.posexplode("_bhs").alias("band", "bv"), F.col("sig"), F.col("_bhs"),
+    )
+    nh, nb, thr = int(num_hashes), int(bands), float(threshold)
+
+    def load(tbl):
+        import numpy as np
+        import pyarrow.compute as pc
+
+        slots = pc.list_flatten(tbl.column(3).chunk(0))
+        nul = pc.is_null(slots).to_numpy(zero_copy_only=False).reshape(-1, nh).any(axis=1)
+        sig = pc.fill_null(slots, 0).to_numpy(zero_copy_only=False).reshape(-1, nh)
+        bh = pc.list_flatten(tbl.column(4).chunk(0)).to_numpy(
+            zero_copy_only=False).reshape(-1, nb)
+        return sig, nul, bh
+
+    def judge(payload, i, j, band):
+        import numpy as np
+
+        sig, nul, bh = payload
+        lowest = np.argmax(bh[i] == bh[j], axis=1)
+        est = (sig[i] == sig[j]).sum(axis=1).astype(np.float64) / np.float64(nh)
+        return (lowest == band) & ~(nul[i] | nul[j]) & (est >= thr), est
+
+    return _banded_pairs(
+        banded, load, judge, T.StructField("est_jaccard", T.DoubleType(), True),
     )
 
 
@@ -913,10 +1054,16 @@ def simhash_near_dups(
     Candidate generation is band rotation (pigeonhole): split the
     `bits`-bit key into `max_hamming + 1` contiguous bands — two keys
     within hamming distance k MUST agree exactly on at least one band, so
-    candidates are pairs equal on some (band_idx, band_value). That keeps
-    candidate generation a groupBy (linear in the corpus, like the MinHash
-    banding above), never an all-pairs join; exact hamming is then
-    verified with bit_count(a XOR b) on the candidates only.
+    candidates are pairs equal on some (band_idx, band_value). Each
+    fingerprint row is exploded to its (band, band value) keys and paired
+    inside its bucket by one shuffle and one kernel (`_banded_pairs`),
+    never an all-pairs join. The kernel takes the XOR of the two
+    fingerprints, keeps a pair only in the lowest band where the XOR is
+    zero, and verifies popcount(XOR) <= max_hamming in place. Lazy:
+    building it runs no Spark job and caches nothing. With duplicate ids
+    every passing ROW pair is emitted once, as a join of candidate ids back
+    to the fingerprints would: pigeonhole makes every passing row pair
+    collide in some band.
 
     Scale note: a band carries bits/(k+1) bits of key (8 bits at the
     32/3 default), so band-bucket sizes are corpus/256 in the worst case —
@@ -924,46 +1071,79 @@ def simhash_near_dups(
     for billion-doc corpora to keep buckets bounded."""
     if not 0 <= max_hamming < bits:
         raise ValueError(f"max_hamming must be in [0, {bits}), got {max_hamming}")
-    fps = _take_cache(simhash(df, id_col, text_col, bits))
-    # Eagerly pin (see minhash_near_dups): concurrent AQE stages over an
-    # unmaterialized cache each recompute the fingerprint kernel.
-    fps.count()
+    fps = simhash(df, id_col, text_col, bits)
     nbands = max_hamming + 1
     w = bits // nbands
     # contiguous bands; the last band absorbs the remainder bits
     widths = [w] * (nbands - 1) + [bits - w * (nbands - 1)]
     offs = [w * i for i in range(nbands)]
+    # a full-width band's all-ones mask is -1 as a long
+    masks = [-1 if wd == 64 else (1 << wd) - 1 for wd in widths]
     banded = fps.select(
-        F.col(id_col).alias("doc"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("simhash"), offs[i])
-                        # a full-width band's all-ones mask is -1 as a long
-                        .bitwiseAND(F.lit(-1 if widths[i] == 64 else (1 << widths[i]) - 1))
-                        .alias("bv"),
-                    )
-                    for i in range(nbands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", "bb.band", "bb.bv")
-    cands = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bv"])
-        .filter(F.col("a.doc") < F.col("b.doc"))
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .distinct()
+        F.col(id_col),
+        F.posexplode(F.array(*[
+            F.shiftright(F.col("simhash"), offs[i]).bitwiseAND(F.lit(masks[i]))
+            for i in range(nbands)
+        ])).alias("band", "bv"),
+        F.col("simhash"),
     )
-    a = fps.withColumnsRenamed({id_col: "id_a", "simhash": "sh_a"})
-    b = fps.withColumnsRenamed({id_col: "id_b", "simhash": "sh_b"})
-    return (
-        cands.join(a, "id_a").join(b, "id_b")
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    kmax = int(max_hamming)
+
+    def load(tbl):
+        return tbl.column(3).to_numpy()
+
+    def judge(fp, i, j, band):
+        import numpy as np
+
+        x = fp[i] ^ fp[j]
+        lowest = np.full(len(x), nbands, dtype=np.int64)
+        for b in range(nbands - 1, -1, -1):
+            lowest[((x >> np.int64(offs[b])) & np.int64(masks[b])) == 0] = b
+        ham = np.unpackbits(x.view(np.uint8).reshape(-1, 8), axis=1).sum(
+            axis=1, dtype=np.int32)
+        return (lowest == band) & (ham <= kmax), ham
+
+    return _banded_pairs(
+        banded, load, judge, T.StructField("hamming", T.IntegerType(), True),
+    )
+
+
+def _label_components(batches):
+    """mapInArrow kernel: connected-component labels of the task's edges
+    (u, v). Ids map to their `np.unique` ranks, so the smallest rank is
+    the smallest id (code-point order for strings, which is UTF-8 byte
+    order, as Spark compares them). Min-label propagation in both edge
+    directions with pointer jumping runs until no label moves. Emits
+    (node, lbl) for every endpoint: lbl is the smallest id of the node's
+    component in THIS task's subgraph."""
+    release_zip_finders()
+    import numpy as np
+    import pyarrow as pa
+
+    us, vs = [], []
+    for rb in batches:
+        us.append(rb.column(0))
+        vs.append(rb.column(1))
+    m = sum(len(u) for u in us)
+    if not m:
+        return
+    ids = pa.concat_arrays(us + vs)
+    uniq, inv = np.unique(ids.to_numpy(zero_copy_only=False), return_inverse=True)
+    u, v = inv[:m], inv[m:]
+    lbl = np.arange(len(uniq))
+    while True:
+        prev = lbl.copy()
+        np.minimum.at(lbl, u, lbl[v])
+        np.minimum.at(lbl, v, lbl[u])
+        while True:  # pointer jumping: take my label's label until stable
+            nxt = lbl[lbl]
+            if np.array_equal(nxt, lbl):
+                break
+            lbl = nxt
+        if np.array_equal(lbl, prev):
+            break
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(uniq, ids.type), pa.array(uniq[lbl], ids.type)], names=["node", "lbl"]
     )
 
 
@@ -977,32 +1157,53 @@ def cluster_dups(
     connected components over the pair graph, cluster_id = smallest doc id
     in the component. Output: (doc_id, cluster_id, is_canonical) — one row
     per doc that appears in >=1 pair; is_canonical marks the kept
-    representative (the smallest id). The same "group then collapse" shape
-    as the reference's keyed assembly fold (archive/manager.go:57-63),
-    applied to the dup graph instead of archive members.
+    representative (the smallest id). Pairs with a NULL id are ignored.
+    The same "group then collapse" shape as the reference's keyed assembly
+    fold (archive/manager.go:57-63), applied to the dup graph instead of
+    archive members.
 
-    Algorithm: distributed min-label propagation with POINTER JUMPING —
-    each round every node takes the min label over {self} ∪ neighbor
-    labels ∪ its label's OWN label (path halving), so convergence is
-    O(log diameter) rounds, not O(diameter); near-dup components are
-    shallow but adversarial chains (A~B~C~...) stay cheap anyway. Each
-    round is two shuffles keyed by node id; lineage is truncated per round
-    (localCheckpoint) so the plan does not grow with iterations. The
-    fixpoint test rides the SAME job: an `observe()` metric (changed-row
-    count) is collected while the eager localCheckpoint materializes the
-    round — one job per round, no separate count pass."""
-    e = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    edges = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .persist()
+    Algorithm: the edges are shuffled on xxhash64(u) (an expression, so
+    the planner cannot drop the exchange when the input is already
+    partitioned on the id) and one numpy kernel per task labels its
+    subgraph's components (`_label_components`); the labels are
+    localCheckpointed (one job). When that stage ran as ONE task — AQE
+    coalesces a small edge set to one partition — the task saw every edge,
+    the labels are exact, and no round runs. Otherwise (the scale path)
+    each node starts from its smallest task label and distributed
+    min-label propagation with POINTER JUMPING refines them: each round
+    every node takes the min label over {self} ∪ neighbor labels ∪ its
+    label's OWN label, so convergence is O(log diameter) rounds, at most
+    `max_iters`. Each round is two shuffles keyed by node id; lineage is
+    truncated per round (localCheckpoint), and the fixpoint test rides the
+    SAME job: an `observe()` metric (changed-row count) is collected while
+    the eager localCheckpoint materializes the round."""
+    e = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")).filter(
+        F.col("u").isNotNull() & F.col("v").isNotNull()
     )
+    id_type = e.select(F.coalesce("u", "v")).schema[0].dataType
+    e = e.select(F.col("u").cast(id_type).alias("u"), F.col("v").cast(id_type).alias("v"))
     labels = (
-        edges.groupBy(F.col("u").alias("node"))
-        .agg(F.min("v").alias("nmin"))
-        .select("node", F.least("node", "nmin").alias("lbl"))
+        e.repartition(F.xxhash64("u"))
+        .mapInArrow(_label_components, T.StructType([
+            T.StructField("node", id_type, False), T.StructField("lbl", id_type, False),
+        ]))
         .localCheckpoint()
     )
+    if labels.rdd.getNumPartitions() > 1:
+        labels = _refine_labels(e, labels.groupBy("node").agg(F.min("lbl").alias("lbl")),
+                                max_iters)
+    return labels.select(
+        F.col("node").alias("doc_id"),
+        F.col("lbl").alias("cluster_id"),
+        (F.col("node") == F.col("lbl")).alias("is_canonical"),
+    )
+
+
+def _refine_labels(e: DataFrame, labels: DataFrame, max_iters: int) -> DataFrame:
+    """Pointer-jumping min-label rounds over the undirected edges `e`
+    (u, v), from `labels` (node, lbl) where every lbl is an id of the
+    node's component and <= node, until no label changes."""
+    edges = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct().persist()
     try:
         for _ in range(max_iters):
             nbr = (
@@ -1014,7 +1215,7 @@ def cluster_dups(
             # one row per node, so this join cannot fan out)
             jump = labels.select(F.col("node").alias("lbl"), F.col("lbl").alias("jlbl"))
             obs = Observation()
-            new = (
+            labels = (
                 labels.join(nbr, "node", "left")
                 .join(jump, "lbl", "left")
                 .select(
@@ -1035,21 +1236,14 @@ def cluster_dups(
                 .select("node", F.col("_new").alias("lbl"))
                 .localCheckpoint()
             )
-            labels = new
             if int(obs.get["changed"] or 0) == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"cluster_dups did not converge in {max_iters} rounds — "
-                "pathological component diameter; raise max_iters"
-            )
+                return labels
+        raise RuntimeError(
+            f"cluster_dups did not converge in {max_iters} rounds — "
+            "pathological component diameter; raise max_iters"
+        )
     finally:
         edges.unpersist()
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("lbl").alias("cluster_id"),
-        (F.col("node") == F.col("lbl")).alias("is_canonical"),
-    )
 
 
 def dedup_by_clusters(

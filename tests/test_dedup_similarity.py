@@ -53,10 +53,12 @@ def test_shingle_jaccard_packed_and_fallback_id_ranges(spark, docs):
     """The pair-count kernel sorts a packed (da << 31) | db key when both
     ids fit in [0, 2^31); ids outside that range take the lexsort
     fallback. Both branches must produce identical pair sets: shift the
-    same corpus's ids past 2^31 (and negative) and compare."""
+    same corpus's ids past 2^31 (and negative) and compare. Offsets of
+    +-2^60 are beyond float64's exact integers, so any float round trip
+    of an id (e.g. a nullable column read through NaN) shows here."""
     small = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
              shingle_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.4).collect()}
-    for off in (1 << 31, -7):
+    for off in (1 << 31, -7, 1 << 60, -(1 << 60)):
         shifted = docs.withColumn("doc_id", F.col("doc_id") + F.lit(off))
         got = {(r["id_a"] - off, r["id_b"] - off): r["jaccard"] for r in
                shingle_jaccard_pairs(shifted, "doc_id", "text", n=3, threshold=0.4).collect()}
@@ -460,3 +462,168 @@ def test_codegen_cache_holds_a_dedup_pass(spark, docs):
     first = one_pass()
     warm = one_pass()
     assert warm <= 40, f"a warm pass compiled {warm} classes; the first pass {first}"
+
+
+def _jobs_in(spark, group, fn):
+    """Run fn() under a fresh job group; return (fn's result, the number of
+    Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _clusters(df):
+    return sorted((r["doc_id"], r["cluster_id"], r["is_canonical"]) for r in df.collect())
+
+
+def test_cluster_dups_refinement_path_matches_one_task(spark, monkeypatch):
+    """With AQE coalescing off, the labelling stage runs as several tasks,
+    each labelling only its own share of the edges, and the pointer-jumping
+    rounds must finish the job: results equal the one-task labelling on
+    the transitive fixture, the 64-node chain at max_iters=10 and a graph
+    of non-ASCII string ids (Spark orders strings by UTF-8 bytes)."""
+    from go_tfdata_spark.operators import dedup
+    from go_tfdata_spark.operators.dedup import cluster_dups
+
+    words = ["zebra", "Zoë", "éclair", "Ω", "日本", "apple", "Äpfel", "ß", "b", "Ωmega"]
+    graphs = [
+        (spark.createDataFrame([(1, 2), (2, 3), (3, 4), (9, 10)], "id_a long, id_b long"), 30),
+        (spark.createDataFrame([(i, i + 1) for i in range(64)], "id_a long, id_b long"), 10),
+        (spark.createDataFrame(
+            [(words[0], words[1]), (words[1], words[2]), (words[3], words[4]),
+             (words[4], words[5]), (words[6], words[7]), (words[8], words[9]),
+             (words[9], words[0])],
+            "id_a string, id_b string"), 30),
+    ]
+    refined = []
+    real = dedup._refine_labels
+    monkeypatch.setattr(dedup, "_refine_labels",
+                        lambda *a: refined.append(1) or real(*a))
+    one_task = [_clusters(cluster_dups(p, max_iters=it)) for p, it in graphs]
+    assert not refined  # a small edge set coalesces to one labelling task
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        many = [_clusters(cluster_dups(p, max_iters=it)) for p, it in graphs]
+    finally:
+        spark.conf.set(key, old)
+    assert len(refined) == len(graphs)
+    assert many == one_task
+    assert {c for _, c, _ in one_task[1]} == {0}
+    # string ids: cluster_id is the smallest id by UTF-8 bytes
+    comps = [words[:3] + words[8:], words[3:6], words[6:8]]
+    want = sorted((w, min(c, key=str.encode), w == min(c, key=str.encode))
+                  for c in comps for w in c)
+    assert one_task[2] == want
+
+
+def test_near_dup_operators_build_lazily(spark, docs):
+    """Building these operators runs no Spark job and pins no cache, so
+    building more of them than the cache registry holds (_MAX_LIVE_CACHES)
+    before consuming any cannot evict a pin: each result equals the
+    result of building and consuming it on its own."""
+    from go_tfdata_spark.operators.dedup import _MAX_LIVE_CACHES, simhash_near_dups
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    builders = (
+        [lambda k=k: minhash_near_dups(docs, "doc_id", "text", num_hashes=16, bands=8,
+                                       threshold=0.1 * k) for k in range(6)]
+        + [lambda k=k: simhash_near_dups(docs, "doc_id", "text", max_hamming=k)
+           for k in range(6)]
+        + [lambda k=k: shingle_jaccard_pairs(docs, "doc_id", "text", n=3,
+                                             threshold=0.1 * k) for k in range(6)]
+    )
+    assert len(builders) > 3 * _MAX_LIVE_CACHES
+    built, jobs = _jobs_in(spark, "near-dup-build", lambda: [b() for b in builders])
+    assert jobs == 0, f"building ran {jobs} Spark jobs"
+    alone = [rows(b()) for b in builders]
+    assert [rows(df) for df in built] == alone
+    assert any(alone[:6]) and any(alone[6:12]) and any(alone[12:])
+
+
+def test_shingle_jaccard_string_ids_match_integral_ids(spark, docs):
+    """The generic-id branch (string ids: JVM pair expansion over a pinned
+    cache of the shingle groups) gives the integral-id kernel's result
+    under the id mapping. The mapping keeps the ids' order."""
+    name = {i: f"doc-{i:03d}" for i in range(5)}
+    sdocs = docs.select(F.format_string("doc-%03d", "doc_id").alias("doc_id"), "text")
+    for thr in (0.0, 0.4):
+        want = {(name[r["id_a"]], name[r["id_b"]], r["jaccard"]) for r in
+                shingle_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=thr).collect()}
+        got = {tuple(r) for r in
+               shingle_jaccard_pairs(sdocs, "doc_id", "text", n=3, threshold=thr).collect()}
+        assert got == want and want, thr
+
+
+def test_banded_pairs_string_ids_match_integral_ids(spark, docs):
+    """MinHash and SimHash pairs of string ids equal the long-id pairs
+    under an order-preserving id mapping. Spark orders strings by UTF-8
+    bytes: U+FFFF sorts before U+1F600 there (and in code points), but
+    after it in UTF-16, so a wrong string order would flip id_a/id_b."""
+    from go_tfdata_spark.operators.dedup import simhash_near_dups
+
+    name = {0: "a", 1: "a\uffff", 2: "a\U0001F600", 3: "é", 4: "éz"}
+    assert [name[i].encode() for i in range(5)] == sorted(name[i].encode() for i in range(5))
+    sdocs = docs.join(
+        spark.createDataFrame(list(name.items()), "doc_id long, sid string"), "doc_id"
+    ).select(F.col("sid").alias("doc_id"), "text")
+    runs = [
+        lambda d: minhash_near_dups(d, "doc_id", "text", num_hashes=16, bands=8, threshold=0.0),
+        lambda d: minhash_near_dups(d, "doc_id", "text", num_hashes=16, bands=8, threshold=0.5),
+        lambda d: simhash_near_dups(d, "doc_id", "text", max_hamming=3),
+        lambda d: simhash_near_dups(d, "doc_id", "text", bits=64, max_hamming=7),
+    ]
+    for k, run in enumerate(runs):
+        want = sorted((name[a], name[b], s) for a, b, s in run(docs).collect())
+        got = sorted(tuple(r) for r in run(sdocs).collect())
+        assert got == want and want, k
+
+
+def test_minhash_near_dups_duplicate_ids_verify_colliding_rows_only(spark):
+    """Id 1 sits on two rows: one the same text as doc 2, one unrelated.
+    Only the colliding row pair is verified, so at threshold 0 the pair
+    (1, 2) appears once, with the estimate of the identical texts; the
+    unrelated row of id 1 shares no band with doc 2 and is never compared
+    (a join of candidate ids back to the signatures compared every row
+    combination of the two ids and emitted the pair twice)."""
+    text = "the quick brown fox jumps over the lazy dog again and again today"
+    df = spark.createDataFrame(
+        [(1, text), (1, "completely different words entirely unrelated content here now"),
+         (2, text)],
+        "doc_id long, text string",
+    )
+    got = [tuple(r) for r in
+           minhash_near_dups(df, "doc_id", "text", num_hashes=16, bands=4, threshold=0.0).collect()]
+    assert got == [(1, 2, 1.0)]
+
+
+# Spark jobs one pass of the near-dup operators below runs on the `docs`
+# fixture since candidates are verified inside the kernel that pairs them
+# (15 in every run; 33-41 when they were verified by self-joins over
+# eagerly pinned caches and cluster_dups ran a job per round).
+_DOCS_PASS_JOBS = 15
+
+
+def test_near_dup_pass_job_count(spark, docs):
+    """A corpus pass is bound by its Spark job count, not by its kernels
+    (one job costs ~0.1 s of fixed work here): one pass of these operators
+    must not run more jobs than it did when this bound was set."""
+    from go_tfdata_spark.operators.dedup import dedup_by_clusters, simhash_near_dups
+
+    def one_pass():
+        pairs = minhash_near_dups(docs, "doc_id", "text", num_hashes=16, bands=8, threshold=0.5)
+        pairs.collect()
+        simhash_near_dups(docs, "doc_id", "text", max_hamming=3).collect()
+        shingle_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.4).collect()
+        dedup_by_clusters(docs, pairs, "doc_id").collect()
+
+    _, jobs = _jobs_in(spark, "near-dup-pass", one_pass)
+    assert jobs <= _DOCS_PASS_JOBS, f"one pass ran {jobs} Spark jobs"
