@@ -46,8 +46,31 @@ from go_tfdata_spark.operators.similarity import brute_force_topk  # noqa: E402
 from go_tfdata_spark.operators.transform import rename_last_wins  # noqa: E402
 
 
+# The contract tables' schemas, exactly as Spark infers them from the
+# parquet files. Reading with a declared schema runs no schema-inference
+# job while a query is being built.
+_SCHEMAS = {
+    "customer": "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+                "c_mktsegment STRING",
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+    "events": "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, "
+              "value DOUBLE, props STRING",
+    "lineitem": "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+                "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
+                "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "orders": "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, "
+              "o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING",
+    "part": "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, "
+            "p_retailprice DOUBLE",
+    "region": "r_regionkey INT, r_name STRING",
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+}
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return spark.read.schema(_SCHEMAS[name]).parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 # Stop-shingle document-frequency cap used by the shingle_jaccard contract

@@ -17,8 +17,11 @@ near-dup — each designed for the 100 TB shape:
   one numpy labelling task when the edge set fits one partition,
   pointer-jumped min-label propagation rounds otherwise) with one
   canonical doc kept per cluster;
-- embedding near-dup offers brute-force (baseline, quadratic) and a
-  random-hyperplane-bucketed variant (the scale path).
+- embedding near-dup offers a random-hyperplane-bucketed variant (the
+  scale path: one numpy kernel buckets every table's vectors, and the
+  banded-pair kernel pairs and scores each bucket) and a quadratic
+  baseline (a tiled block product with a BLAS prefilter); both score
+  cosines bit for bit as the JVM expression does, in numpy.
 
 A corpus pass is bound by its Spark job count, not by its kernels (one
 job costs ~0.1 s of fixed work on a 4-vCPU box): the near-dup operators
@@ -1272,6 +1275,265 @@ def hyperplane_matrix(hyperplanes: int, dim: int, seed: int = 7):
     return rng.randn(hyperplanes, dim).astype(float)
 
 
+# Slack under the threshold at which the exact path's BLAS prefilter keeps a
+# candidate. Its cosine of two unit-scaled float64 vectors is within about
+# dim * 2^-52 of the sequential score (under 1e-9 below dim ~10^6); float
+# vectors multiply in float32 in the scored expression (relative error up to
+# 2^-24 per product), so they get more room.
+_PREFILTER_SLACK = {"double": 1e-9, "float": 1e-6}
+# Side of the largest block-product tile the exact path scores at once
+# (2048 x 2048 float64 = 32 MB).
+_TILE = 2048
+# Rows whose norm lies outside this range skip the prefilter and are always
+# rescored: their products can underflow or overflow, so the scaled BLAS
+# cosine need not track the sequential one.
+_NORM_RANGE = (1e-100, 1e100)
+
+
+def _vector_rows(arr):
+    """An Arrow list array of vectors as (lens, ok, values, starts): row r's
+    elements are values[starts[r]:starts[r] + lens[r]], and ok is False for
+    a NULL vector or one that holds a NULL element (its dot products are
+    NULL, so it never pairs)."""
+    import numpy as np
+
+    lens = arr.value_lengths().fill_null(0).to_numpy().astype(np.int64)
+    flat = arr.flatten()  # honours slicing, skips NULL rows
+    ok = arr.is_valid().to_numpy(zero_copy_only=False, writable=True)
+    nulls = flat.is_null().to_numpy(zero_copy_only=False)
+    if nulls.any():
+        ok[np.repeat(np.arange(len(arr)), lens)[nulls]] = False
+    return lens, ok, flat.to_numpy(zero_copy_only=False), np.cumsum(lens) - lens
+
+
+def _columns(values, starts, rows, width):
+    """width x len(rows) matrix of the rows' elements: element k of every
+    row is one contiguous array, so pair products gather one column."""
+    import numpy as np
+
+    return values[starts[rows] + np.arange(width)[:, None]]
+
+
+def _pair_dots(ut, vt, i, j):
+    """dot(u_i, v_j) for each pair, exactly as `functions.vectors.dot`
+    computes it: acc = acc + u[k] * v[k] from k = 0, in float64, each
+    product taken in the element type (float32 for float vectors). No BLAS:
+    its summation order differs."""
+    import numpy as np
+
+    acc = np.zeros(len(i))
+    with np.errstate(all="ignore"):  # inf and NaN elements score as in the JVM
+        for k in range(len(ut)):
+            acc = acc + ut[k][i] * vt[k][j]
+    return acc
+
+
+def _norms(ut):
+    """`functions.vectors.l2_norm` of every column of ut."""
+    import numpy as np
+
+    r = np.arange(ut.shape[1])
+    return np.sqrt(_pair_dots(ut, ut, r, r))
+
+
+def _cosine_keep(ut, vt, nu, nv, i, j, thr):
+    """(keep, cos) of the pairs (u_i, v_j): cos as
+    `functions.vectors.cosine_similarity` computes it, dot / (|u| * |v|).
+    A zero divisor never pairs (the expression is NULL there, or raises
+    under ANSI mode); a NaN cosine passes, as Spark orders NaN above every
+    number."""
+    import numpy as np
+
+    den = nu[i] * nv[j]
+    ok = den != 0
+    with np.errstate(all="ignore"):
+        cos = _pair_dots(ut, vt, i, j) / np.where(ok, den, 1.0)
+    return ok & ((cos >= thr) | np.isnan(cos)), cos
+
+
+def _plane_buckets(xt, planes, hyperplanes):
+    """Every column of xt's bucket in every table (n x tables): `planes`
+    stacks the tables' hyperplane matrices, and bit j of a table's bucket
+    is set when the sequential float64 dot with its plane j is > 0 or NaN
+    (Spark orders NaN above 0), as the bucket expression of the oracle."""
+    import numpy as np
+
+    acc = np.zeros((xt.shape[1], len(planes)))
+    with np.errstate(all="ignore"):
+        for k in range(len(xt)):
+            acc = acc + xt[k][:, None] * planes[:, k]
+    bits = ((acc > 0) | np.isnan(acc)).reshape(xt.shape[1], -1, hyperplanes)
+    return (bits.astype(np.int64) << np.arange(hyperplanes)).sum(axis=2)
+
+
+def _vector_input(df: DataFrame, id_col: str, vec_col: str):
+    """(id, v) of `df` and the element type name the vectors are scored
+    in: float and double vectors keep theirs, other numeric vectors are
+    cast to double."""
+    vt = df.select(F.col(vec_col)).schema.fields[0].dataType
+    if not isinstance(vt, T.ArrayType):
+        raise TypeError(f"{vec_col} must be an array column, got {vt.simpleString()}")
+    v = F.col(vec_col)
+    if not isinstance(vt.elementType, (T.FloatType, T.DoubleType)):
+        v = v.cast("array<double>")
+    work = df.select(F.col(id_col).alias("id"), v.alias("v"))
+    return work, work.schema.fields[1].dataType.elementType.typeName()
+
+
+def _hyperplane_banded(
+    df: DataFrame, id_col: str, vec_col: str, hyperplanes: int, dim: int, seed: int,
+    tables: int,
+) -> DataFrame:
+    """Banded rows of the LSH path, one per (vector, table): (id, band =
+    the table, bv = the vector's bucket in it, v, bks = its buckets in
+    every table). Table t's planes are `hyperplane_matrix(hyperplanes, dim,
+    seed + 101 * t)`; one mapInArrow kernel computes every table's bits for
+    a batch. A row with a NULL id, a NULL vector, a NULL element or a
+    length other than `dim` gets no banded row: its bucket expression is
+    NULL, so it never pairs."""
+    import numpy as np
+
+    planes = np.vstack([hyperplane_matrix(hyperplanes, dim, seed + 101 * t) for t in range(tables)])
+    work, _ = _vector_input(df, id_col, vec_col)
+    id_field, vec_field = work.schema.fields
+    names = ["id", "band", "bv", "v", "bks"]
+
+    def kernel(batches):
+        release_zip_finders()
+        import numpy as np
+        import pyarrow as pa
+
+        for rb in batches:
+            lens, ok, values, starts = _vector_rows(rb.column(1))
+            ok &= (lens == dim) & rb.column(0).is_valid().to_numpy(zero_copy_only=False)
+            rows = np.flatnonzero(ok)
+            if not len(rows):
+                continue
+            bks = _plane_buckets(_columns(values, starts, rows, dim), planes, hyperplanes)
+            take = pa.array(rows)
+            ids, vecs = rb.column(0).take(take), rb.column(1).take(take)
+            bk_lists = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, bks.size + 1, tables, dtype=np.int32)),
+                pa.array(bks.ravel()),
+            )
+            for t in range(tables):
+                yield pa.RecordBatch.from_arrays(
+                    [ids, pa.array(np.full(len(rows), t, dtype=np.int32)), pa.array(bks[:, t]),
+                     vecs, bk_lists],
+                    names=names,
+                )
+
+    return work.mapInArrow(kernel, T.StructType([
+        T.StructField("id", id_field.dataType, False),
+        T.StructField("band", T.IntegerType(), False),
+        T.StructField("bv", T.LongType(), False),
+        T.StructField("v", vec_field.dataType, False),
+        T.StructField("bks", T.ArrayType(T.LongType(), False), False),
+    ]))
+
+
+def _length_groups(arr):
+    """{width: (rows, ut, nrm, unit, loose)} of a block's scorable vectors
+    grouped by length (only equal lengths pair: zip_with pads the shorter
+    vector with NULLs). ut is the width x n element matrix, nrm the exact
+    norms (zero-norm rows dropped: they never pair), unit the float64 rows
+    scaled to unit length for the prefilter, and loose marks rows whose
+    norm is not finite or outside `_NORM_RANGE` (always rescored)."""
+    import numpy as np
+
+    lens, ok, values, starts = _vector_rows(arr)
+    groups = {}
+    for width in np.unique(lens[ok]):
+        rows = np.flatnonzero(ok & (lens == width))
+        ut = _columns(values, starts, rows, width)
+        nrm = _norms(ut)
+        live = nrm != 0
+        rows, ut, nrm = rows[live], ut[:, live], nrm[live]
+        loose = ~((nrm >= _NORM_RANGE[0]) & (nrm <= _NORM_RANGE[1]))
+        with np.errstate(all="ignore"):
+            unit = np.ascontiguousarray((ut / nrm).T, dtype=np.float64)
+        unit[loose] = 0.0
+        groups[int(width)] = (rows, ut, nrm, unit, loose)
+    return groups
+
+
+def _block_product(a, b, same: bool, thr: float, slack: float):
+    """Verified (id_a, id_b, cos) record batches of the row pairs between
+    blocks `a` and `b` (struct arrays of (id, v)), or among the rows of `a`
+    when `same`: every row pair with different ids once, id_a the smaller.
+    Tiles of at most `_TILE` x `_TILE` are prefiltered with one BLAS
+    product of the unit-scaled vectors at thr - slack; the candidates are
+    rescored exactly (`_cosine_keep`)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids = pa.concat_arrays([a.field(0), b.field(0)])
+    key = pc.rank(ids, sort_keys="ascending", tiebreaker="dense").to_numpy()
+    ka, kb = key[:len(a)], key[len(a):]
+    ga = _length_groups(a.field(1))
+    gb = ga if same else _length_groups(b.field(1))
+    for width in ga.keys() & gb.keys():
+        ra, uta, nu, xa, la = ga[width]
+        rb, utb, nv, xb, lb = gb[width]
+        for a0 in range(0, len(ra), _TILE):
+            for b0 in range(a0 if same else 0, len(rb), _TILE):
+                cand = xa[a0:a0 + _TILE] @ xb[b0:b0 + _TILE].T >= thr - slack
+                cand |= la[a0:a0 + _TILE, None] | lb[None, b0:b0 + _TILE]
+                if same:
+                    cand = np.triu(cand, a0 - b0 + 1)
+                pi, pj = np.nonzero(cand)
+                pi += a0
+                pj += b0
+                differ = ka[ra[pi]] != kb[rb[pj]]
+                pi, pj = pi[differ], pj[differ]
+                for s in range(0, len(pi), _PAIR_BATCH_ROWS):
+                    i, j = pi[s:s + _PAIR_BATCH_ROWS], pj[s:s + _PAIR_BATCH_ROWS]
+                    keep, cos = _cosine_keep(uta, utb, nu, nv, i, j, thr)
+                    i, j = ra[i[keep]], rb[j[keep]] + len(a)
+                    lo = key[i] < key[j]
+                    yield pa.RecordBatch.from_arrays(
+                        [ids.take(pa.array(np.where(lo, i, j))),
+                         ids.take(pa.array(np.where(lo, j, i))), pa.array(cos[keep])],
+                        names=["id_a", "id_b", "cos"],
+                    )
+
+
+def _exact_pairs(df: DataFrame, id_col: str, vec_col: str, threshold: float) -> DataFrame:
+    """The quadratic baseline: the JVM groups the rows into
+    defaultParallelism blocks (collect_list of (id, v) per
+    pmod(xxhash64(id))), joins the blocks to each other (block a <= block
+    b), and one kernel works through each block pair (`_block_product`)."""
+    work, elem = _vector_input(df, id_col, vec_col)
+    id_type = work.schema.fields[0].dataType
+    nblk = df.sparkSession.sparkContext.defaultParallelism
+    blocks = (
+        work.filter(F.col("id").isNotNull() & F.col("v").isNotNull())
+        .groupBy(F.pmod(F.xxhash64("id"), F.lit(nblk)).alias("blk"))
+        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
+    )
+    prod = blocks.select(F.col("blk").alias("ba"), F.col("rows").alias("ra")).join(
+        blocks.select(F.col("blk").alias("bb"), F.col("rows").alias("rb")),
+        F.col("ba") <= F.col("bb"),
+    )
+    thr, slack = float(threshold), _PREFILTER_SLACK[elem]
+
+    def kernel(batches):
+        release_zip_finders()
+        for rb in batches:
+            ba, ra, bb, rows_b = (rb.column(c) for c in range(4))
+            for r in range(rb.num_rows):
+                same = ba[r].as_py() == bb[r].as_py()
+                yield from _block_product(ra.slice(r, 1).flatten(), rows_b.slice(r, 1).flatten(),
+                                          same, thr, slack)
+
+    return prod.mapInArrow(kernel, T.StructType([
+        T.StructField("id_a", id_type, False),
+        T.StructField("id_b", id_type, False),
+        T.StructField("cos", T.DoubleType(), True),
+    ]))
+
+
 def embedding_near_dups(
     df: DataFrame,
     id_col: str,
@@ -1284,29 +1546,33 @@ def embedding_near_dups(
     tables: int = 1,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (cos >= threshold, id_a < id_b).
+    Output: (id_a, id_b, cos).
 
-    DEFAULT is the scale path: random-hyperplane bucket join — vectors must
+    DEFAULT is the scale path: random-hyperplane buckets — vectors must
     agree on all `hyperplanes` sign bits (of at least one of `tables`
     independent plane sets: OR-amplification raises recall without
-    shrinking buckets) before any cosine is computed. The quadratic
-    brute-force self-join is the exactness baseline ONLY and must be
-    requested explicitly with `exact=True` — calling this operator with
-    defaults never plans a cross join. `dim` (the embedding dimension) is
-    REQUIRED on the LSH path: the hyperplane matrix is built driver-side
-    and the array type does not carry a length, so inferring it would put
-    a driver probe job inside any caller's loop."""
-    from go_tfdata_spark.functions.vectors import cosine_similarity
+    shrinking buckets) before any cosine is computed. One kernel computes
+    every table's buckets (`_hyperplane_banded`), and the banded-pair
+    kernel (`_banded_pairs`) pairs each bucket after one shuffle, keeps a
+    pair only in the lowest table whose buckets agree, and checks its
+    cosine: no bucket join, `distinct` or join back to the vectors. The
+    quadratic block product (`_exact_pairs`) is the exactness baseline
+    ONLY and must be requested explicitly with `exact=True` — calling this
+    operator with defaults never plans a cross join. `dim` (the embedding
+    dimension) is REQUIRED on the LSH path: the hyperplane matrix is built
+    driver-side and the array type does not carry a length, so inferring
+    it would put a driver probe job inside any caller's loop.
 
-    df = _ensure_parallelism(df, id_col)
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    Scores equal `functions.vectors.cosine_similarity` bit for bit (a
+    left-to-right float64 dot; float vectors multiply in float32; other
+    numeric vectors are cast to double), and a bucket bit is set when the
+    same sequential dot with the plane is > 0. A NULL vector, a NULL
+    element or a zero norm never pairs, nor on the LSH path does a length
+    other than `dim`. Duplicate ids: as in `minhash_near_dups`, the LSH
+    path scores only ROW pairs that share a bucket; the exact path scores
+    every row pair with different ids."""
     if exact:
-        joined = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-        return (
-            joined.withColumn("cos", cosine_similarity(F.col("va"), F.col("vb")))
-            .filter(F.col("cos") >= threshold)
-            .select("id_a", "id_b", "cos")
-        )
+        return _exact_pairs(df, id_col, vec_col, threshold)
     if hyperplanes <= 0:
         raise ValueError(
             "hyperplanes must be positive for the LSH path; "
@@ -1318,45 +1584,28 @@ def embedding_near_dups(
             "no driver probe is ever run; pass exact=True for the "
             "quadratic baseline if you cannot know the dimension"
         )
+    if tables < 1:
+        raise ValueError(f"tables must be >= 1, got {tables}")
+    banded = _hyperplane_banded(df, id_col, vec_col, hyperplanes, dim, seed, tables)
+    thr, width, nt = float(threshold), int(dim), int(tables)
 
-    def bucket(vc, planes):
-        out = F.lit(0)
-        for j in range(hyperplanes):
-            dot = F.aggregate(
-                F.zip_with(
-                    vc,
-                    F.array(*[F.lit(float(x)) for x in planes[j]]),
-                    lambda u, w: u * w,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            out = out + (dot > 0).cast("int") * (2**j)
-        return out
+    def load(tbl):
+        import numpy as np
+        import pyarrow.compute as pc
 
-    if tables == 1:
-        # single table: carry the vectors through the bucket join — one join
-        planes = hyperplane_matrix(hyperplanes, dim, seed)
-        at = a.withColumn("bkt", bucket(F.col("va"), planes))
-        bt = b.withColumn("bkt", bucket(F.col("vb"), planes))
-        joined = at.join(bt, "bkt").filter(F.col("id_a") < F.col("id_b"))
-        return (
-            joined.withColumn("cos", cosine_similarity(F.col("va"), F.col("vb")))
-            .filter(F.col("cos") >= threshold)
-            .select("id_a", "id_b", "cos")
-        )
-    # OR-amplified: slim (id, bucket) joins per table, dedup the candidate
-    # pair set, THEN fetch vectors once for the surviving pairs.
-    cand = None
-    for t in range(tables):
-        planes = hyperplane_matrix(hyperplanes, dim, seed + 101 * t)
-        at = a.select("id_a", bucket(F.col("va"), planes).alias("bkt"))
-        bt = b.select("id_b", bucket(F.col("vb"), planes).alias("bkt"))
-        p = at.join(bt, "bkt").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-        cand = p if cand is None else cand.unionByName(p)
-    return (
-        cand.distinct().join(a, "id_a").join(b, "id_b")
-        .withColumn("cos", cosine_similarity(F.col("va"), F.col("vb")))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
+        vals = pc.list_flatten(tbl.column(3).chunk(0)).to_numpy(zero_copy_only=False)
+        ut = np.ascontiguousarray(vals.reshape(-1, width).T)
+        bks = pc.list_flatten(tbl.column(4).chunk(0)).to_numpy(zero_copy_only=False)
+        return ut, _norms(ut), bks.reshape(-1, nt)
+
+    def judge(payload, i, j, band):
+        import numpy as np
+
+        ut, nrm, bks = payload
+        sel = np.flatnonzero(np.argmax(bks[i] == bks[j], axis=1) == band)
+        keep = np.zeros(len(i), dtype=bool)
+        cos = np.zeros(len(i))
+        keep[sel], cos[sel] = _cosine_keep(ut, ut, nrm, nrm, i[sel], j[sel], thr)
+        return keep, cos
+
+    return _banded_pairs(banded, load, judge, T.StructField("cos", T.DoubleType(), True))

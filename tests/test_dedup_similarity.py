@@ -627,3 +627,209 @@ def test_near_dup_pass_job_count(spark, docs):
 
     _, jobs = _jobs_in(spark, "near-dup-pass", one_pass)
     assert jobs <= _DOCS_PASS_JOBS, f"one pass ran {jobs} Spark jobs"
+
+
+@pytest.fixture(scope="module")
+def vec_rows():
+    """300 seeded 64-dim vectors; about one in five is a positively scaled
+    copy of an earlier one (half of those with noise added)."""
+    import numpy as np
+
+    rng = np.random.default_rng(14)
+    v = rng.standard_normal((300, 64))
+    for i in range(1, len(v)):
+        if rng.random() < 0.2:
+            j = int(rng.integers(0, i))
+            v[i] = v[j] * rng.uniform(0.1, 10.0)
+            if rng.random() < 0.5:
+                v[i] += rng.standard_normal(64) * 0.3
+    return [(i, [float(x) for x in row]) for i, row in enumerate(v)]
+
+
+def _lambda_cos(df):
+    """{(id_a, id_b): cos} of every pair, by `functions.vectors.cosine_similarity`."""
+    from go_tfdata_spark.functions.vectors import cosine_similarity
+
+    a = df.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
+    b = df.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
+    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+    return {(r[0], r[1]): r[2] for r in pairs.select(
+        "id_a", "id_b", cosine_similarity(F.col("va"), F.col("vb"))).collect()}
+
+
+@pytest.mark.parametrize("elem", ["double", "float"])
+def test_embedding_kernel_cos_equals_lambda_expression(spark, vec_rows, elem):
+    """Both paths score a pair exactly as the JVM cosine expression does
+    (float64 ==, no rounding): a left-to-right float64 dot, float vectors
+    multiplying in float32. Scaled copies sit at cos 1.0 +- 1 ulp, where a
+    different summation order shows."""
+    df = spark.createDataFrame(vec_rows, f"vec_id long, v array<{elem}>")
+    want = _lambda_cos(df)
+    exact = {(r[0], r[1]): r[2] for r in
+             embedding_near_dups(df, "vec_id", "v", threshold=-1.0, exact=True).collect()}
+    assert exact == want
+    for thr in (0.3, 0.9):
+        got = {(r[0], r[1]): r[2] for r in
+               embedding_near_dups(df, "vec_id", "v", threshold=thr, exact=True).collect()}
+        assert got == {k: c for k, c in want.items() if c >= thr}
+    lsh = {(r[0], r[1]): r[2] for r in embedding_near_dups(
+        df, "vec_id", "v", threshold=0.3, hyperplanes=4, dim=64, tables=2).collect()}
+    assert lsh and all(want[k] == c and c >= 0.3 for k, c in lsh.items())
+    assert any(c != 1.0 and abs(c - 1.0) < 1e-6 for c in want.values())
+
+
+def test_embedding_exact_path_extreme_rows_equal_lambda_expression(spark):
+    """Rows the BLAS prefilter cannot judge are always rescored: a NaN or
+    an infinite element (the JVM scores NaN, and Spark orders NaN above
+    every threshold) and norms so small or large that the sequential
+    products underflow or overflow. Every pair scores as the JVM
+    expression does (NaN compared as NaN)."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    base = rng.standard_normal((12, 8))
+    vecs = [list(base[i]) for i in range(6)]
+    vecs += [list(base[i] * s) for i, s in ((0, 1e-160), (1, 1e-160), (0, 1e160), (2, 1e160))]
+    vecs += [[float("nan")] + list(base[6][1:]), [float("inf")] + list(base[7][1:])]
+    df = spark.createDataFrame([(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+                               "vec_id long, v array<double>")
+
+    def canon(pairs):
+        return {k: "nan" if math.isnan(c) else c for k, c in pairs.items()}
+
+    want = canon(_lambda_cos(df))
+    assert "nan" in want.values()
+    for thr in (-1.0, 0.5):
+        got = canon({(r[0], r[1]): r[2] for r in
+                     embedding_near_dups(df, "vec_id", "v", threshold=thr, exact=True).collect()})
+        assert got == {k: c for k, c in want.items() if c == "nan" or c >= thr}, thr
+
+
+def test_embedding_lsh_buckets_equal_lambda_expression(spark, vec_rows):
+    """The bucket kernel's bucket of every (vector, table) equals the
+    bucket expression restated from `hyperplane_matrix` and
+    `functions.vectors.dot` (bit j set when dot > 0; Spark orders NaN
+    above 0). Rows whose expression is NULL (NULL element, wrong length,
+    NULL vector) get no banded row."""
+    from go_tfdata_spark.functions.vectors import dot
+    from go_tfdata_spark.operators.dedup import _hyperplane_banded, hyperplane_matrix
+
+    extra = [(900, [float("nan")] + [1.0] * 63), (901, [0.0] * 64), (902, [1.0] * 63),
+             (903, [None] + [1.0] * 63), (904, None)]
+    df = spark.createDataFrame(vec_rows + extra, "vec_id long, v array<double>")
+    hp, seed, tables = 6, 11, 3
+    want = set()
+    for t in range(tables):
+        planes = hyperplane_matrix(hp, 64, seed + 101 * t)
+        bkt = sum(
+            (dot(F.col("v"), F.array(*[F.lit(float(x)) for x in planes[j]])) > 0).cast("int")
+            * (2 ** j)
+            for j in range(hp)
+        )
+        want |= {(r[0], t, r[1]) for r in df.select("vec_id", bkt).collect() if r[1] is not None}
+    banded = _hyperplane_banded(df, "vec_id", "v", hp, 64, seed, tables)
+    got = [(r["id"], r["band"], r["bv"]) for r in banded.collect()]
+    assert len(got) == len(set(got)) and set(got) == want
+    assert {i for i, _, _ in got} == set(range(len(vec_rows))) | {900, 901}
+
+
+def test_embedding_near_dups_edge_rows(spark):
+    """A NULL vector, a NULL element and a zero vector never pair; a
+    length other than `dim` never pairs on the LSH path, and on the exact
+    path pairs only with vectors of its own length. Duplicate ids: the
+    exact path scores every row pair of two ids; the LSH path only the row
+    pairs that share a bucket, each once (the `_banded_pairs` contract):
+    id 1's second row is near doc 0 but in another bucket."""
+    import numpy as np
+
+    from go_tfdata_spark.operators.dedup import hyperplane_matrix
+
+    near = [1.0, 0.0, 0.0, -0.5]
+    planes = hyperplane_matrix(4, 4, 7)
+    assert tuple(planes @ np.array(near) > 0) != tuple(planes @ np.array([1.0, 0, 0, 0]) > 0)
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0]),
+        (1, [3.0, 0.0, 0.0, 0.0]),
+        (1, near),
+        (2, None),
+        (3, [1.0, None, 0.0, 0.0]),
+        (4, [1.0, 0.0, 0.0]),
+        (5, [0.0, 0.0, 0.0, 0.0]),
+        (6, [2.0, 0.0, 0.0, 0.0]),
+        (7, [2.0, 0.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    c = 1.0 / math.sqrt(1.25)
+    exact = sorted(tuple(r) for r in
+                   embedding_near_dups(df, "vec_id", "v", threshold=0.5, exact=True).collect())
+    assert exact == sorted([(0, 1, 1.0), (0, 1, c), (0, 6, 1.0), (1, 6, 1.0), (1, 6, c),
+                            (4, 7, 1.0)])
+    lsh = sorted(tuple(r) for r in embedding_near_dups(
+        df, "vec_id", "v", threshold=0.5, hyperplanes=4, dim=4).collect())
+    assert lsh == [(0, 1, 1.0), (0, 6, 1.0), (1, 6, 1.0)]
+
+
+def test_embedding_near_dups_tables_union_of_single_tables(spark, vec_rows):
+    """OR-amplification: `tables=3` returns each pair once, and exactly
+    the union of the three single-table runs (table t's planes are seeded
+    seed + 101 t)."""
+    df = spark.createDataFrame(vec_rows, "vec_id long, v array<double>")
+    kw = dict(threshold=0.2, hyperplanes=3, dim=64)
+    multi = [tuple(r) for r in embedding_near_dups(df, "vec_id", "v", seed=5, tables=3, **kw).collect()]
+    union = set()
+    singles = []
+    for t in range(3):
+        single = {tuple(r) for r in
+                  embedding_near_dups(df, "vec_id", "v", seed=5 + 101 * t, **kw).collect()}
+        singles.append(single)
+        union |= single
+    assert len(multi) == len(set(multi))
+    assert set(multi) == union
+    assert all(s < union for s in singles)
+
+
+def _chained_python_udfs(plan):
+    """MapInArrow nodes of a final executed plan that have another
+    MapInArrow below them with no exchange in between."""
+    bad = []
+
+    def walk(node, above):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan(), above)
+        if name.endswith("QueryStageExec"):
+            return walk(node.plan(), above)
+        if "Exchange" in name:
+            above = None
+        elif name == "MapInArrowExec":
+            if above is not None:
+                bad.append(above)
+            above = node.toString()
+        kids = node.children()
+        for k in range(kids.size()):
+            walk(kids.apply(k), above)
+
+    walk(plan, None)
+    return bad
+
+
+def test_embedding_near_dups_never_chain_python_udfs(spark, vec_rows):
+    """No stage of either path runs a MapInArrow fed, without an exchange,
+    by another one: the daemon then forks a second Python worker per task,
+    and the summed worker RSS roughly doubles."""
+    df = spark.createDataFrame(vec_rows, "vec_id long, v array<double>")
+    runs = [
+        embedding_near_dups(df, "vec_id", "v", threshold=0.3, exact=True),
+        embedding_near_dups(df, "vec_id", "v", threshold=0.3, hyperplanes=4, dim=64),
+        embedding_near_dups(df, "vec_id", "v", threshold=0.3, hyperplanes=4, dim=64, tables=3),
+    ]
+    for out in runs:
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan()
+        assert "MapInArrow" in plan.toString()
+        assert not _chained_python_udfs(plan)
+    # the walk does see a chain when there is one
+    ident = df.select("vec_id")
+    chained = ident.mapInArrow(lambda b: b, ident.schema).mapInArrow(lambda b: b, ident.schema)
+    chained.collect()
+    assert _chained_python_udfs(chained._jdf.queryExecution().executedPlan())
