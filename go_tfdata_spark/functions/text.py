@@ -110,19 +110,20 @@ def fingerprint(c: Column) -> Column:
 
 
 def rolling_hash(c: Column, mod: int = 2**31 - 1) -> Column:
-    """Polynomial rolling hash of a string (fold over characters,
-    acc = acc*31 + ascii(ch) mod `mod`) — a deterministic 31-bit hash
-    expressible identically in ANSI SQL (DuckDB list_reduce), used where
-    both engines must agree on hash values (minhash/simhash oracles).
+    """Polynomial rolling hash of a string (fold over code points,
+    acc = acc*31 + ascii(ch) mod `mod`) — a deterministic hash expressible
+    identically in ANSI SQL (DuckDB list_reduce).
+
+    This is the reference definition, not an engine path: the MinHash and
+    SimHash kernels of `operators.dedup` compute the same values from
+    prefix sums (`_substring_hashes`), and the tests and oracles restate
+    this fold to check them. No engine code calls it.
 
     `mod=2**64` selects the 64-bit variant (full long wraparound, result
     reinterpreted as signed). ANSI mode forbids overflowing multiplies, so
     the fold carries the accumulator as two 32-bit limbs (hi, lo) — each
     step stays under 2^37 — and recombines with shiftleft|or (bitwise ops,
-    overflow-exempt). Exists for oracle-expressible 64-bit hashing and is
-    currently exercised only by tests — simhash(bits=64) mixes with
-    xxhash64 instead (a rolling hash gains ~5 bits of entropy per char, so
-    short tokens would leave high fingerprint bits constant)."""
+    overflow-exempt). Other moduli must keep acc*31 + ch within a long."""
     chars = F.split(c, "")
     if mod == 2**64:
         mask32 = F.lit((1 << 32) - 1)

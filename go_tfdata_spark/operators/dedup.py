@@ -4,6 +4,13 @@ Exact, shingle-Jaccard, MinHash+LSH, SimHash, and embedding-cosine
 near-dup — each designed for the 100 TB shape:
 
 - exact dedup is a hash aggregation on a fingerprint (map-side combine);
+- the shingler, MinHash and SimHash share one text path in their Arrow
+  kernels: one normalizer (`_normalize`), chunks of a fixed code-point
+  budget (`_text_chunks`), one span builder for word n-grams with the
+  whole-text fallback (`_spans`; SimHash's tokens are its n = 1 case),
+  and one flat prefix-sum rolling hash over the chunk's code points
+  (`_substring_hashes`), so a kernel's memory tracks its chunk's code
+  points, not rows x longest document;
 - Jaccard avoids the O(n^2) cross join by grouping docs per shingle (only
   docs sharing at least one shingle ever meet) and counting pairs in a
   numpy kernel;
@@ -28,8 +35,9 @@ job costs ~0.1 s of fixed work on a 4-vCPU box): the near-dup operators
 are lazy — building one runs no job — except the generic-id branch of
 `shingle_jaccard_pairs` (one pin) and `cluster_dups` (its labelling).
 
-All hashes are engine-agnostic (md5 / polynomial rolling hash) so DuckDB
-oracles can restate them exactly.
+All hashes are engine-agnostic (md5 / polynomial rolling hash, restated
+by `functions.text.rolling_hash`) so DuckDB oracles can restate them
+exactly; SimHash at bits=64 mixes tokens with the JVM's xxhash64.
 """
 
 from __future__ import annotations
@@ -38,7 +46,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from go_tfdata_spark.functions.text import fingerprint, rolling_hash
+from go_tfdata_spark.functions.text import fingerprint, tokens
 from go_tfdata_spark.worker import release_zip_finders
 
 _MERSENNE = 2**31 - 1
@@ -144,41 +152,172 @@ def _ensure_parallelism(df: DataFrame, *cols: str) -> DataFrame:
     return df
 
 
-def _exploded_shingles_jvm(df: DataFrame, id_col: str, text_col: str, n: int):
-    """Exploded word-n-gram rows (id, sh) WITHOUT per-row dedup, built by
-    codegen'd projection instead of a higher-order `transform`.
-
-    The HOF lambda is evaluated interpreted per element (~23us/shingle
-    measured at sf1.0 — 2.3s vs 0.38s for this shape over 2.6M shingles);
-    exploding the position sequence and projecting
-    concat_ws(token[i..i+n-1]) stays inside whole-stage codegen. The
-    multiset of (id, shingle) rows is identical to
-    explode(word_shingles(text, n)) — verified by groupBy-count equality —
-    including the <n-token fallback (one shingle = the normalized text).
-    Use where downstream aggregation is insensitive to per-row duplicate
-    shingles (e.g. minhash's per-document min)."""
-    from go_tfdata_spark.functions.text import normalize_text
-
-    t = F.split(normalize_text(F.col(text_col)), " ")
-    gen = df.select(
-        F.col(id_col), t.alias("_t"),
-        F.explode(
-            F.sequence(F.lit(1), F.greatest(F.size(t) - F.lit(n - 1), F.lit(1)))
-        ).alias("_i"),
-    )
-    sh = F.when(
-        F.size("_t") >= n,
-        F.concat_ws(
-            " ", *[F.element_at("_t", F.col("_i") + F.lit(k)) for k in range(n)]
-        ),
-    ).otherwise(F.concat_ws(" ", "_t"))
-    return gen.select(F.col(id_col), sh.alias("sh"))
-
-
 # Exactly Java's \s class ([ \t\n\x0B\f\r]) spelled out for RE2 — RE2's \s
-# omits \x0B, so the Arrow shingler must not use \s if it is to normalize
+# omits \x0B, so the Arrow kernels must not use \s if they are to normalize
 # byte-for-byte like functions.text.normalize_text (Java regex) does.
 _JAVA_WS_RE = "[ \t\n\x0b\x0c\r]+"
+# Code points a text kernel handles at once (one more is counted per row):
+# its numpy arrays are a few int64s per code point, whatever the rows'
+# lengths. A longer document is a chunk of its own.
+_CHUNK_CHARS = 1 << 20
+
+
+def _normalize(text):
+    """`functions.text.normalize_text` on an Arrow string array: trim
+    spaces, lower-case, collapse every whitespace run to one ' '."""
+    import pyarrow.compute as pc
+
+    return pc.replace_substring_regex(
+        pc.utf8_lower(pc.utf8_trim(text, " ")), pattern=_JAVA_WS_RE, replacement=" "
+    )
+
+
+def _text_chunks(batches):
+    """(ids, text) chunks of (id, text) record batches, the text
+    normalized (NULL stays NULL), each chunk within `_CHUNK_CHARS`."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    for rb in batches:
+        text = _normalize(rb.column(1))
+        ends = np.cumsum(pc.utf8_length(text).fill_null(0).to_numpy() + 1, dtype=np.int64)
+        i = 0
+        while i < len(ends):
+            base = ends[i - 1] if i else 0
+            j = max(i + 1, int(np.searchsorted(ends, base + _CHUNK_CHARS, "right")))
+            yield rb.column(0).slice(i, j - i), text.slice(i, j - i)
+            i = j
+
+
+def _spans(text, n: int, length=None):
+    """(row, start, end) of every word n-gram of every row of `text` (a
+    normalized string array without NULLs): the rows are laid end to end
+    and split on ' ', and an n-gram runs from its first token's start to
+    its last token's end. A row with fewer than n tokens has one span, its
+    whole text (split always gives a row at least one token). Positions
+    count code points, or bytes with `length=pc.binary_length`. Spans come
+    in row order."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    toks = pc.split_pattern(text, " ")
+    m = pc.list_value_length(toks).to_numpy().astype(np.int64)
+    tlen = (length or pc.utf8_length)(pc.list_flatten(toks)).to_numpy().astype(np.int64)
+    # a token starts one ' ' after the previous one ends; rows abut
+    tstart = np.cumsum(tlen + 1) - (tlen + 1) - np.repeat(np.arange(len(m)), m)
+    c = np.maximum(m - n + 1, 1)
+    row = np.repeat(np.arange(len(m)), c)
+    first = np.arange(c.sum()) + np.repeat(np.cumsum(m) - m - (np.cumsum(c) - c), c)
+    last = first + np.minimum(m, n)[row] - 1
+    return row, tstart[first], tstart[last] + tlen[last]
+
+
+def _utf8(text):
+    """The UTF-8 bytes of the rows of a string array, laid end to end."""
+    import numpy as np
+
+    offsets, data = text.buffers()[1:3]
+    offs = np.frombuffer(offsets, np.int32)[text.offset:text.offset + len(text) + 1]
+    if data is None:
+        return np.zeros(0, np.uint8)
+    return np.frombuffer(data, np.uint8)[offs[0]:offs[-1]]
+
+
+def _code_points(text):
+    """The code points of the rows of a string array, laid end to end:
+    ASCII bytes as they are, anything else decoded once for the chunk."""
+    import numpy as np
+
+    raw = _utf8(text)
+    if not len(raw) or raw.max() < 0x80:
+        return raw
+    return np.frombuffer(raw.tobytes().decode("utf-8").encode("utf-32-le"), np.uint32)
+
+
+def _substring_hashes(cp, start, end, mod: int):
+    """`functions.text.rolling_hash` (acc = acc * 31 + c, mod `mod`) of
+    every substring cp[start:end) of the code points `cp`, in O(len(cp))
+    with no per-substring loop: with S[k] = sum_{j<k} c_j * 31^-(j+1),
+    the hash of cp[a:b) is 31^b * (S[b] - S[a]). `mod` is a prime below
+    2^31, where int64 products never overflow, or a power of two up to
+    2^64: uint64 arithmetic wraps mod 2^64, a multiple of `mod`, and a mask
+    reduces the result (31 is odd, so it is invertible there as well).
+    Returns int64 (the signed view for mod 2^64)."""
+    import numpy as np
+
+    pow2 = not mod & (mod - 1)
+    dt, ring = (np.uint64, 1 << 64) if pow2 else (np.int64, mod)
+
+    def reduce(v):
+        if not pow2:
+            np.remainder(v, dt(mod), out=v)
+
+    size = len(cp) + 1
+
+    def powers(base):  # base^0 .. base^(size-1), the filled half doubling
+        p = np.empty(size, dt)
+        p[0] = 1
+        k = 1
+        while k < size:
+            w = min(k, size - k)
+            np.multiply(p[:w], dt(pow(base, k, ring)), out=p[k:k + w])
+            reduce(p[k:k + w])
+            k += w
+        return p
+
+    t = cp.astype(dt)
+    t *= powers(pow(31, -1, ring))[1:]
+    reduce(t)
+    s = np.zeros(size, dt)
+    np.cumsum(t, out=s[1:])
+    del t
+    h = s[end] - s[start]
+    reduce(h)
+    h *= powers(31)[end]
+    reduce(h)
+    return (h & np.uint64(mod - 1)).view(np.int64) if pow2 else h
+
+
+def _shingle_kernel(batches, n: int):
+    """mapInArrow kernel: (id, text) -> (doc, sh), the distinct word
+    n-grams of each row (see `_exploded_distinct_shingles_arrow`)."""
+    release_zip_finders()
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    for ids, text in _text_chunks(batches):
+        valid = text.is_valid()
+        ids, text = ids.filter(valid), text.filter(valid)
+        if not len(ids):
+            continue
+        row, start, end = _spans(text, n, pc.binary_length)
+        lens = end - start
+        offs = np.zeros(len(row) + 1, np.int64)
+        np.cumsum(lens, out=offs[1:])
+        data = _utf8(text)[np.repeat(start - offs[:-1], lens) + np.arange(offs[-1])]
+        sh = pa.StringArray.from_buffers(
+            len(row), pa.py_buffer(offs.astype(np.int32)), pa.py_buffer(data)
+        )
+        # per-row distinct by value: dictionary codes + (row, code) sort
+        codes = pc.dictionary_encode(sh).indices.to_numpy().astype(np.int64)
+        order = np.lexsort((codes, row))
+        r, c = row[order], codes[order]
+        keep = np.ones(len(r), dtype=bool)
+        keep[1:] = (r[1:] != r[:-1]) | (c[1:] != c[:-1])
+        sel = order[keep]
+        yield pa.RecordBatch.from_arrays(
+            [ids.take(pa.array(row[sel])), sh.take(pa.array(sel))], names=["doc", "sh"]
+        )
+
+
+def _map_text(df: DataFrame, id_col: str, text_col: str, kernel, out_id: str, field):
+    """(id, text) of `df` through a text kernel: mapInArrow to (out_id,
+    field), out_id keeping the id column's type."""
+    id_field = df.schema[id_col]
+    return df.select(F.col(id_col), F.col(text_col)).mapInArrow(kernel, T.StructType([
+        T.StructField(out_id, id_field.dataType, id_field.nullable), field,
+    ]))
 
 
 def _exploded_distinct_shingles_arrow(df: DataFrame, id_col: str, text_col: str, n: int):
@@ -186,80 +325,17 @@ def _exploded_distinct_shingles_arrow(df: DataFrame, id_col: str, text_col: str,
     vectorized Arrow kernels + numpy inside the workers.
 
     Semantics are exactly explode(array_distinct(word_shingles(text, n))):
-    lower/trim/whitespace-collapse normalization (the collapse regex is the
-    Java \\s class spelled out — see _JAVA_WS_RE), n-gram join with ' ',
-    whole-normalized-text fallback for <n-token rows, and duplicate
-    shingles dropped WITHIN each input row (never across rows, so
-    degenerate duplicate-id inputs fold exactly as the oracle's per-row
-    unnest(list_distinct(...)) does). The JVM expression shape pays the
-    interpreted-HOF toll per shingle; this runs ~6x faster on the same
-    input and emits the identical row multiset (order differs; every
-    consumer aggregates)."""
-    id_field = df.schema[id_col]
-
-    def shingler(batches):
-        release_zip_finders()
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for rb in batches:
-            ids = rb.column(0)
-            if len(ids) == 0:
-                continue
-            norm = pc.replace_substring_regex(
-                pc.utf8_lower(pc.utf8_trim(rb.column(1), " ")),
-                pattern=_JAVA_WS_RE, replacement=" ",
-            )
-            toks = pc.split_pattern(norm, " ")
-            m = pc.list_value_length(toks).to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = pc.list_flatten(toks)
-            offsets = np.concatenate(([0], np.cumsum(m)))
-            k = np.maximum(m - (n - 1), 0)
-            total_k = int(k.sum())
-            # global token index of each n-gram's first token
-            base = np.repeat(offsets[:-1], k)
-            within = np.arange(total_k) - np.repeat(np.cumsum(k) - k, k)
-            starts = base + within
-            parts = [vals.take(pa.array(starts + j, pa.int64())) for j in range(n)]
-            ngrams = pc.binary_join_element_wise(*parts, " ")
-            ngram_rows = np.repeat(np.arange(len(ids)), k)
-            fb_rows = np.flatnonzero(m < n)
-            sh_all = pa.concat_arrays([
-                ngrams.combine_chunks() if isinstance(ngrams, pa.ChunkedArray) else ngrams,
-                norm.take(pa.array(fb_rows, pa.int64())).combine_chunks()
-                if isinstance(norm, pa.ChunkedArray)
-                else norm.take(pa.array(fb_rows, pa.int64())),
-            ])
-            rows_all = np.concatenate([ngram_rows, fb_rows])
-            # per-row distinct by value: dictionary codes + (row, code) sort
-            d = pc.dictionary_encode(sh_all)
-            if isinstance(d, pa.ChunkedArray):
-                d = d.combine_chunks()
-            codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            order = np.lexsort((codes, rows_all))
-            r_s, c_s = rows_all[order], codes[order]
-            keep = np.empty(len(r_s), dtype=bool)
-            if len(keep):
-                keep[0] = True
-                np.not_equal(r_s[1:], r_s[:-1], out=keep[1:])
-                keep[1:] |= c_s[1:] != c_s[:-1]
-            sel = order[keep]
-            out_ids = ids.take(pa.array(rows_all[sel], pa.int64()))
-            out_sh = sh_all.take(pa.array(sel, pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                [out_ids.combine_chunks() if isinstance(out_ids, pa.ChunkedArray) else out_ids,
-                 out_sh.combine_chunks() if isinstance(out_sh, pa.ChunkedArray) else out_sh],
-                names=["doc", "sh"],
-            )
-
-    from pyspark.sql.types import StructField, StructType
-
-    out_schema = StructType([
-        StructField("doc", id_field.dataType, id_field.nullable),
-        StructField("sh", T.StringType(), False),
-    ])
-    return df.select(F.col(id_col), F.col(text_col)).mapInArrow(shingler, out_schema)
+    lower/trim/whitespace-collapse normalization (`_normalize`), n-gram
+    join with ' ' (each n-gram is the byte span `_spans` gives), the whole
+    normalized text for <n-token rows, and duplicate shingles dropped
+    WITHIN each input row (never across rows, so degenerate duplicate-id
+    inputs fold exactly as the oracle's per-row unnest(list_distinct(...))
+    does). NULL text has no shingles. The JVM expression shape pays the
+    interpreted-HOF toll per shingle; this emits the identical row
+    multiset (order differs; every consumer aggregates)."""
+    nn = int(n)
+    return _map_text(df, id_col, text_col, lambda batches: _shingle_kernel(batches, nn),
+                     "doc", T.StructField("sh", T.StringType(), False))
 
 
 def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -525,6 +601,29 @@ def _minhash_params(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
     return params
 
 
+def _minhash_kernel(batches, n: int, params, id_col: str):
+    """mapInArrow kernel: (id, text) -> (id, sig), one row per input row."""
+    release_zip_finders()
+    import numpy as np
+    import pyarrow as pa
+
+    for ids, text in _text_chunks(batches):
+        null = text.is_null().to_numpy(zero_copy_only=False)
+        text = text.fill_null("")
+        row, start, end = _spans(text, n)
+        x = _substring_hashes(_code_points(text), start, end, _MERSENNE)
+        seg = np.flatnonzero(np.diff(row, prepend=-1))  # each row's first span
+        sig = np.empty((len(ids), len(params)), np.int64)
+        for k, (a, b) in enumerate(params):  # one slot at a time
+            sig[:, k] = np.minimum.reduceat((np.int64(a) * x + np.int64(b)) % _MERSENNE, seg)
+        # null text keeps its row with every slot NULL (a min over nulls)
+        values = pa.array(sig.ravel(), mask=np.repeat(null, len(params)) if null.any() else None)
+        offsets = pa.array(np.arange(len(ids) + 1, dtype=np.int32) * len(params))
+        yield pa.RecordBatch.from_arrays(
+            [ids, pa.ListArray.from_arrays(offsets, values)], names=[id_col, "sig"]
+        )
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
@@ -536,158 +635,25 @@ def minhash_signatures(
     """MinHash signature per document: sig[i] = min over shingles s of
     (a_i * rolling_hash(s) + b_i) mod p. Output: (id, sig array<long>).
 
-    Computed in ONE vectorized Arrow/numpy kernel, zero shuffles: the
-    normalized text equals ' '.join(tokens) (split-then-join with a single
-    separator char is the identity), so every word n-gram shingle IS a
-    contiguous substring of the normalized document — its polynomial
-    rolling hash follows in O(1) from the document's prefix-hash array
-    (hash(s[a..b]) = (H[b] - H[a-1]*31^(b-a+1)) mod p; p prime, all
-    int64-safe). No 2.6M-row shingle explode, no per-char interpreted
-    fold, no groupBy: each document is one input row, so the kernel emits
-    its final signature directly (per-doc min over the shingle hashes via
-    segmented reduction). The per-document min is insensitive to duplicate
-    shingle values, so skipping array_distinct is exact. Values are
-    bit-identical to the expression formulation (the oracle restates them
-    through DuckDB list_reduce and compares exactly).
+    One Arrow/numpy kernel, zero shuffles. The normalized text equals
+    ' '.join(tokens), so every word n-gram shingle IS a contiguous span of
+    it (`_spans`), and the rolling hash of every span follows from one
+    prefix sum over the chunk's code points (`_substring_hashes`): no
+    shingle explode, no per-char fold, no groupBy, and no cost that grows
+    with the longest document of a chunk. Each document is one input row,
+    so the kernel emits its final signature directly (a per-doc min,
+    slot by slot). The min is insensitive to duplicate shingles, so
+    skipping array_distinct is exact. NULL text keeps its row with every
+    slot NULL. Values equal the rolling-hash formulation bit for bit (the
+    oracle restates them through DuckDB list_reduce and compares exactly).
     """
-    import pyarrow as pa
-
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
     params = _minhash_params(num_hashes, seed)
-    a_vec = [a for a, _ in params]
-    b_vec = [b for _, b in params]
-    id_field = df.schema[id_col]
     nn = int(n)
-
-    def kernel(batches):
-        release_zip_finders()
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        A = np.array(a_vec, dtype=np.int64)[:, None]
-        B = np.array(b_vec, dtype=np.int64)[:, None]
-        P = np.int64(_MERSENNE)
-
-        def run(ids, norm0):
-            """One bounded chunk of documents -> one output RecordBatch."""
-            nrows = len(ids)
-            null_mask = pc.is_null(norm0).to_numpy(zero_copy_only=False)
-            norm = pc.fill_null(norm0, "")
-            if isinstance(norm, pa.ChunkedArray):
-                norm = norm.combine_chunks()
-            doc_cp = pc.utf8_length(norm).to_numpy(zero_copy_only=False).astype(np.int64)
-            max_len = int(doc_cp.max()) if nrows else 0
-            # code-point matrix (docs x max_len), zero-padded. ASCII fast
-            # path reads the UTF-8 buffer directly (bytes == code points);
-            # otherwise a numpy U-array view gives exact UTF-32 points.
-            if max_len == 0:
-                cp = np.zeros((nrows, 0), dtype=np.int64)
-            elif pc.all(pc.string_is_ascii(norm), min_count=0).as_py():
-                buf = np.frombuffer(norm.buffers()[2], dtype=np.uint8)
-                offs = np.frombuffer(norm.buffers()[1], dtype=np.int32).astype(np.int64)
-                offs = offs[norm.offset: norm.offset + nrows + 1]
-                starts_b = offs[:-1]
-                gather = starts_b[:, None] + np.arange(max_len)[None, :]
-                np.minimum(gather, np.maximum(offs[1:, None] - 1, starts_b[:, None]),
-                           out=gather)
-                cp = buf[gather].astype(np.int64) if len(buf) else np.zeros(
-                    (nrows, max_len), dtype=np.int64
-                )
-                cp[np.arange(max_len)[None, :] >= doc_cp[:, None]] = 0
-            else:
-                u = np.array(norm.to_pylist(), dtype=f"U{max(max_len, 1)}")
-                cp = u.view(np.uint32).reshape(nrows, -1).astype(np.int64)
-            # prefix hashes per doc: H[:, j] = hash of first j code points
-            H = np.zeros((nrows, max_len + 1), dtype=np.int64)
-            acc = np.zeros(nrows, dtype=np.int64)
-            for j in range(max_len):
-                acc = np.where(j < doc_cp, (acc * 31 + cp[:, j]) % P, acc)
-                H[:, j + 1] = acc
-            pow31 = np.empty(max_len + 1, dtype=np.int64)
-            pow31[0] = 1
-            for j in range(1, max_len + 1):
-                pow31[j] = (pow31[j - 1] * 31) % P
-            # token boundaries: tokens = split(norm, ' '); token k spans
-            # [tok_start[k], tok_start[k] + tok_len[k]) in code points
-            toks = pc.split_pattern(norm, " ")
-            m = pc.list_value_length(toks).to_numpy(zero_copy_only=False).astype(np.int64)
-            tlen = pc.utf8_length(pc.list_flatten(toks)).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            tok_doc_start = np.concatenate(([0], np.cumsum(m)))
-            # start position of each token inside its doc
-            pos_global = np.concatenate(([0], np.cumsum(tlen + 1)))[:-1]
-            pos_in_doc = pos_global - np.repeat(pos_global[tok_doc_start[:-1]], m)
-            # shingles: docs with m >= n emit m-n+1 substrings
-            # [tok k start .. tok k+n-1 end); docs with m < n emit the
-            # whole normalized text as their single shingle
-            k = np.maximum(m - (nn - 1), 0)
-            kb = np.repeat(tok_doc_start[:-1], k)
-            within = np.arange(int(k.sum())) - np.repeat(np.cumsum(k) - k, k)
-            first_tok = kb + within
-            last_tok = first_tok + (nn - 1)
-            sub_a = pos_in_doc[first_tok]
-            sub_b = pos_in_doc[last_tok] + tlen[last_tok]  # exclusive end
-            row_of = np.repeat(np.arange(nrows), k)
-            fb_rows = np.flatnonzero(m < nn)
-            sub_a = np.concatenate([sub_a, np.zeros(len(fb_rows), dtype=np.int64)])
-            sub_b = np.concatenate([sub_b, doc_cp[fb_rows]])
-            row_of = np.concatenate([row_of, fb_rows])
-            # substring rolling hash from prefixes
-            hb = H[row_of, sub_b]
-            ha = H[row_of, sub_a]
-            x = (hb - (ha * pow31[sub_b - sub_a]) % P) % P
-            # hash family + per-doc min (the fallback block appends after
-            # the doc-contiguous n-gram block, so order by row first)
-            order = np.argsort(row_of, kind="stable")
-            row_of, x = row_of[order], x[order]
-            hx = (A * x[None, :] + B) % P  # (num_hashes, n_shingles)
-            seg = np.flatnonzero(
-                np.concatenate(([True], row_of[1:] != row_of[:-1]))
-            )
-            sig = np.minimum.reduceat(hx, seg, axis=1)  # (num_hashes, n_docs)
-            out_rows = row_of[seg]
-            out_ids = ids.take(pa.array(out_rows, pa.int64()))
-            if isinstance(out_ids, pa.ChunkedArray):
-                out_ids = out_ids.combine_chunks()
-            # null text folds exactly like the expression path: the doc
-            # keeps its row, every signature slot NULL (min over nulls)
-            vmask = np.repeat(null_mask[out_rows], num_hashes)
-            values = pa.array(sig.T.ravel(), pa.int64(),
-                              mask=vmask if vmask.any() else None)
-            offsets = pa.array(
-                np.arange(len(out_rows) + 1, dtype=np.int32) * num_hashes
-            )
-            sig_list = pa.ListArray.from_arrays(offsets, values)
-            return pa.RecordBatch.from_arrays(
-                [out_ids, sig_list], names=[id_col, "sig"]
-            )
-
-        for rb in batches:
-            nrows = len(rb)
-            if nrows == 0:
-                continue
-            norm_all = pc.replace_substring_regex(
-                pc.utf8_lower(pc.utf8_trim(rb.column(1), " ")),
-                pattern=_JAVA_WS_RE, replacement=" ",
-            )
-            if isinstance(norm_all, pa.ChunkedArray):
-                norm_all = norm_all.combine_chunks()
-            ml = pc.max(pc.utf8_length(norm_all), min_count=0).as_py() or 1
-            # bound the (rows x max_len) prefix matrices to ~32 MB
-            step = max(256, int(32e6 / (8 * (ml + 1))))
-            for i in range(0, nrows, step):
-                j = min(nrows, i + step)
-                yield run(rb.column(0).slice(i, j - i), norm_all.slice(i, j - i))
-
-    out_schema = StructType([
-        StructField(id_col, id_field.dataType, id_field.nullable),
-        StructField("sig", ArrayType(LongType()), False),
-    ])
-    work = _ensure_parallelism(df, id_col).select(F.col(id_col), F.col(text_col))
-    return work.mapInArrow(kernel, out_schema)
+    return _map_text(
+        _ensure_parallelism(df, id_col), id_col, text_col,
+        lambda batches: _minhash_kernel(batches, nn, params, id_col),
+        id_col, T.StructField("sig", T.ArrayType(T.LongType()), False),
+    )
 
 
 def _band_hashes(sig_col: str, bands: int, sig_len: int):
@@ -884,28 +850,54 @@ def minhash_near_dups(
     )
 
 
+def _simhash_kernel(batches, bits: int, id_col: str):
+    """mapInArrow kernel: (id, text) -> (id, simhash); NULL text has no row."""
+    release_zip_finders()
+    import numpy as np
+    import pyarrow as pa
+
+    for ids, text in _text_chunks(batches):
+        valid = text.is_valid()
+        ids, text = ids.filter(valid), text.filter(valid)
+        if not len(ids):
+            continue
+        row, start, end = _spans(text, 1)
+        h = _substring_hashes(_code_points(text), start, end, 1 << bits)
+        seg = np.flatnonzero(np.diff(row, prepend=-1))
+        m = np.diff(np.append(seg, len(row)))  # tokens per row
+        fp = np.zeros(len(ids), np.int64)
+        for i in range(bits):  # bit i is set when more tokens vote 1 than 0
+            ones = np.add.reduceat((h >> np.int64(i)) & np.int64(1), seg)
+            fp |= (2 * ones > m).astype(np.int64) << np.int64(i)
+        yield pa.RecordBatch.from_arrays([ids, pa.array(fp)], names=[id_col, "simhash"])
+
+
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFrame:
     """SimHash: per token, a `bits`-bit token hash votes +1/-1 per bit
     position; the sign of each bit's vote sum forms the fingerprint.
-    Output: (id, simhash long). One explode + one groupBy with `bits`
-    conditional sums — all codegen'd.
+    Output: (id, simhash long); NULL text has no row, empty text gives 0.
 
-    Token hash: bits<=32 uses the polynomial rolling hash (DuckDB-oracle
-    expressible); bits=64 uses JVM-native xxhash64 — a rolling hash only
+    Token hash: bits < 64 uses the polynomial rolling hash mod 2^bits
+    (DuckDB-oracle expressible), in one Arrow/numpy kernel with zero
+    shuffles: the tokens are the n = 1 spans of `_spans`, their hashes come
+    from one prefix sum (`_substring_hashes`), and each document emits its
+    fingerprint directly. bits=64 uses JVM-native xxhash64 in one explode
+    and one groupBy with 64 conditional sums — a rolling hash only
     accumulates ~5 bits of entropy per character, so short tokens would
     leave the upper fingerprint bits constant-zero and the high bands of
     `simhash_near_dups` degenerate (one bucket holding the whole corpus).
     xxhash64 avalanches all 64 bits regardless of token length."""
+    if not 1 <= bits <= 64:
+        raise ValueError(f"bits must be in [1, 64], got {bits}")
     df = _ensure_parallelism(df, id_col)
-    if bits <= 32:
-        return _simhash_arrow(df, id_col, text_col, bits)
-    tok = df.select(
-        F.col(id_col),
-        F.explode(F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")).alias("w"),
-    )
-    tok = tok.withColumn(
-        "h",
-        F.xxhash64(F.col("w")) if bits == 64 else rolling_hash(F.col("w"), mod=2**bits),
+    if bits < 64:
+        nbits = int(bits)
+        return _map_text(
+            df, id_col, text_col, lambda batches: _simhash_kernel(batches, nbits, id_col),
+            id_col, T.StructField("simhash", T.LongType(), False),
+        )
+    tok = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("w")).select(
+        F.col(id_col), F.xxhash64("w").alias("h")
     )
     votes = tok.groupBy(id_col).agg(
         *[
@@ -923,124 +915,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
         weight = -(2**63) if i == 63 else 2**i
         acc = acc + F.when(F.col(f"b{i}") > 0, F.lit(weight).cast("long")).otherwise(0)
     return votes.select(id_col, acc.alias("simhash"))
-
-
-def _simhash_arrow(df: DataFrame, id_col: str, text_col: str, bits: int) -> DataFrame:
-    """bits<=32 SimHash in one vectorized kernel, zero shuffles: token
-    rolling hashes (mod 2^bits) come from the document's prefix-hash array
-    (every token is a substring of the normalized text — Horner prefix
-    differences are exact for any power-of-two modulus via masking), bit
-    votes are a segmented popcount, and each document emits its final
-    fingerprint directly (one input row per doc, so no groupBy). Matches
-    the expression formulation bit-for-bit, including the no-row output
-    for NULL text (explode of a null array emits nothing) and the
-    all-votes-negative zero fingerprint for empty text."""
-    import pyarrow as pa
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    id_field = df.schema[id_col]
-    nbits = int(bits)
-
-    def kernel(batches):
-        release_zip_finders()
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        MASK = np.int64((1 << nbits) - 1)
-
-        def run(ids, norm):
-            nrows = len(ids)
-            keep = ~pc.is_null(norm).to_numpy(zero_copy_only=False)
-            doc_cp = pc.utf8_length(pc.fill_null(norm, "")).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            norm_f = pc.fill_null(norm, "")
-            if isinstance(norm_f, pa.ChunkedArray):
-                norm_f = norm_f.combine_chunks()
-            max_len = int(doc_cp.max()) if nrows else 0
-            if max_len == 0:
-                cp = np.zeros((nrows, 0), dtype=np.int64)
-            elif pc.all(pc.string_is_ascii(norm_f), min_count=0).as_py():
-                buf = np.frombuffer(norm_f.buffers()[2], dtype=np.uint8)
-                offs = np.frombuffer(norm_f.buffers()[1], dtype=np.int32).astype(np.int64)
-                offs = offs[norm_f.offset: norm_f.offset + nrows + 1]
-                starts_b = offs[:-1]
-                gather = starts_b[:, None] + np.arange(max_len)[None, :]
-                np.minimum(gather, np.maximum(offs[1:, None] - 1, starts_b[:, None]),
-                           out=gather)
-                cp = buf[gather].astype(np.int64) if len(buf) else np.zeros(
-                    (nrows, max_len), dtype=np.int64
-                )
-                cp[np.arange(max_len)[None, :] >= doc_cp[:, None]] = 0
-            else:
-                u = np.array(norm_f.to_pylist(), dtype=f"U{max(max_len, 1)}")
-                cp = u.view(np.uint32).reshape(nrows, -1).astype(np.int64)
-            # prefix hashes mod 2^bits (mask keeps Horner exact)
-            H = np.zeros((nrows, max_len + 1), dtype=np.int64)
-            acc = np.zeros(nrows, dtype=np.int64)
-            for j in range(max_len):
-                acc = np.where(j < doc_cp, (acc * 31 + cp[:, j]) & MASK, acc)
-                H[:, j + 1] = acc
-            pow31 = np.empty(max_len + 1, dtype=np.int64)
-            pow31[0] = 1
-            for j in range(1, max_len + 1):
-                pow31[j] = (pow31[j - 1] * 31) & MASK
-            toks = pc.split_pattern(norm_f, " ")
-            m = pc.list_value_length(toks).to_numpy(zero_copy_only=False).astype(np.int64)
-            tlen = pc.utf8_length(pc.list_flatten(toks)).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            tok_doc_start = np.concatenate(([0], np.cumsum(m)))
-            pos_global = np.concatenate(([0], np.cumsum(tlen + 1)))[:-1]
-            pos_in_doc = pos_global - np.repeat(pos_global[tok_doc_start[:-1]], m)
-            row_of = np.repeat(np.arange(nrows), m)
-            sub_a = pos_in_doc
-            sub_b = pos_in_doc + tlen
-            # int64 wraparound is arithmetic mod 2^64; masking afterwards
-            # yields exact mod 2^bits for any power-of-two modulus
-            h = (H[row_of, sub_b] - H[row_of, sub_a] * pow31[tlen]) & MASK
-            # bit votes: ones_i per doc via segmented sums of unpacked bits
-            hb = np.empty((len(h), nbits), dtype=np.int8)
-            for i in range(nbits):
-                hb[:, i] = (h >> np.int64(i)) & np.int64(1)
-            ones = np.add.reduceat(hb, tok_doc_start[:-1], axis=0, dtype=np.int64)
-            ones[m == 0] = 0  # defensive; split always yields >=1 token
-            votes_pos = (2 * ones) > m[:, None]  # sum(+1/-1) > 0
-            weights = (1 << np.arange(nbits, dtype=np.int64))
-            sh = (votes_pos * weights[None, :]).sum(axis=1).astype(np.int64)
-            out_ids = ids.filter(pa.array(keep))
-            sh = sh[keep]
-            if isinstance(out_ids, pa.ChunkedArray):
-                out_ids = out_ids.combine_chunks()
-            return pa.RecordBatch.from_arrays(
-                [out_ids, pa.array(sh, pa.int64())], names=[id_col, "simhash"]
-            )
-
-        for rb in batches:
-            nrows = rb.num_rows
-            if nrows == 0:
-                continue
-            norm_all = pc.replace_substring_regex(
-                pc.utf8_lower(pc.utf8_trim(rb.column(1), " ")),
-                pattern=_JAVA_WS_RE, replacement=" ",
-            )
-            if isinstance(norm_all, pa.ChunkedArray):
-                norm_all = norm_all.combine_chunks()
-            ml = pc.max(pc.utf8_length(norm_all), min_count=0).as_py() or 1
-            step = max(256, int(32e6 / (8 * (ml + 1))))
-            for i in range(0, nrows, step):
-                j = min(nrows, i + step)
-                out = run(rb.column(0).slice(i, j - i), norm_all.slice(i, j - i))
-                if out.num_rows:
-                    yield out
-
-    out_schema = StructType([
-        StructField(id_col, id_field.dataType, id_field.nullable),
-        StructField("simhash", LongType(), False),
-    ])
-    return df.select(F.col(id_col), F.col(text_col)).mapInArrow(kernel, out_schema)
 
 
 def simhash_near_dups(

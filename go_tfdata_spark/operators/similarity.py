@@ -19,12 +19,13 @@ ncells).
 
 from __future__ import annotations
 
+import math
 import threading as _threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from go_tfdata_spark.functions.vectors import cosine_similarity
+from go_tfdata_spark.functions.vectors import dot, l2_norm
 from go_tfdata_spark.worker import release_zip_finders
 
 # Bounded registry of live cached assignments (path=None indexes): building
@@ -55,12 +56,28 @@ def _qvec(query: list[float]):
 def brute_force_topk(
     df: DataFrame, vec_col: str, query: list[float], k: int = 10, id_col: str = "vec_id"
 ) -> DataFrame:
-    """Exact top-k by cosine; deterministic tie-break on id."""
-    scored = df.select(
-        F.col(id_col),
-        cosine_similarity(F.col(vec_col), _qvec(query)).alias("cos"),
+    """Exact top-k by cosine; deterministic tie-break on id. The score is
+    `functions.vectors.cosine_similarity` bit for bit, the query's norm
+    taken once on the driver (the same left-to-right float64 sum). A row
+    whose cosine is undefined (a NULL or zero vector, a NULL element) is
+    dropped, as `embedding_near_dups` never pairs it; a zero query raises
+    ValueError before any job runs."""
+    q = [float(x) for x in query]
+    qn = 0.0
+    for x in q:
+        qn = qn + x * x
+    qn = math.sqrt(qn)
+    if qn == 0:
+        raise ValueError("query vector has zero norm: its cosine with any row is undefined")
+    v = F.col(vec_col)
+    cos = F.try_divide(dot(v, _qvec(q)), l2_norm(v) * F.lit(qn))
+    # undefined scores are NULL and sort last, so dropping them after the
+    # top-k keeps the one TakeOrderedAndProject and the k best defined rows
+    return (
+        df.select(F.col(id_col), cos.alias("cos"))
+        .orderBy(F.desc("cos"), F.asc(id_col)).limit(k)
+        .filter(F.col("cos").isNotNull())
     )
-    return scored.orderBy(F.desc("cos"), F.asc(id_col)).limit(k)
 
 
 class IVFIndex:

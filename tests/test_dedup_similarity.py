@@ -278,6 +278,37 @@ def test_ivf_topk_matches_brute_force(spark):
     assert approx == exact
 
 
+def test_brute_force_topk_drops_undefined_cosines(spark):
+    """A zero vector among the scored rows has no cosine: it is dropped (it
+    made the whole query raise DIVIDE_BY_ZERO under ANSI mode), as are NULL
+    vectors and NULL elements. The scores equal the JVM cosine expression,
+    the plan keeps one TakeOrderedAndProject and runs one job, and a zero
+    query raises before any job runs."""
+    from go_tfdata_spark.functions.vectors import cosine_similarity
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [0.5, 0.5]), (3, None), (4, [None, 1.0]),
+         (5, [0.3, -0.9])],
+        "vec_id long, v array<double>",
+    )
+    out = brute_force_topk(df, "v", [1.0, 0.0], k=10)
+    got, jobs = _jobs_in(spark, "topk-undefined", lambda: [tuple(r) for r in out.collect()])
+    want = sorted(
+        (tuple(r) for r in df.filter(F.col("vec_id").isin(0, 2, 5)).select(
+            "vec_id", cosine_similarity(F.col("v"), F.array(F.lit(1.0), F.lit(0.0))).alias("c")
+        ).collect()),
+        key=lambda r: (-r[1], r[0]),
+    )
+    assert got == want and [r[0] for r in got] == [0, 2, 5]
+    assert jobs == 1
+    assert out._jdf.queryExecution().executedPlan().toString().count("TakeOrderedAndProject") == 1
+    assert [r[0] for r in brute_force_topk(df, "v", [1.0, 0.0], k=1).collect()] == [0]
+    for zero in ([0.0, 0.0], [1e-200, 0.0], []):
+        with pytest.raises(ValueError, match="zero norm"):
+            _jobs_in(spark, "topk-zero-query", lambda: brute_force_topk(df, "v", zero, k=3))
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup("topk-zero-query")) == 0
+
+
 def test_ivf_vectorized_assignment_many_cells(spark):
     """Cell assignment is ONE mapInArrow stage whose plan size is O(1) in
     ncells (regression: the Catalyst formulation nested ncells

@@ -95,3 +95,80 @@ def test_simhash_pinned_on_edge_fixture(edge_docs, bits):
     # NULL text has no row (the token explode of a NULL array emits none)
     want = {i: _ref_simhash(t, bits) for i, t in _edge_rows() if t is not None}
     assert got == want
+
+
+def _random_text(rng: random.Random, size: int) -> str:
+    alphabet = "ab z \t" + "éüß" + "漢字テ" + "🙂𝄞😀"
+    return "".join(rng.choice(alphabet) for _ in range(size))
+
+
+@pytest.mark.parametrize("mod", [_MERSENNE, 2**32, 2**16])
+def test_substring_hashes_equal_horner(mod):
+    import numpy as np
+
+    from go_tfdata_spark.operators.dedup import _substring_hashes
+
+    rng = random.Random(mod)
+    text = _random_text(rng, 4000)
+    cp = np.array([ord(c) for c in text], dtype=np.uint32)
+    start = np.array([rng.randrange(len(text)) for _ in range(800)] + [0, len(text), 7])
+    end = np.array([rng.randrange(s, min(len(text), s + 400) + 1) for s in start[:-3]]
+                   + [len(text), len(text), 7])
+    got = _substring_hashes(cp, start, end, mod)
+    assert got.dtype == np.int64
+    assert got.tolist() == [_roll(text[a:b], mod) for a, b in zip(start, end)]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5])
+def test_spans_are_the_word_shingles(n):
+    """Every span of `_spans` is a shingle of its row, in code points over
+    the rows laid end to end, and in bytes over their UTF-8."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from go_tfdata_spark.operators.dedup import _code_points, _normalize, _spans, _utf8
+
+    texts = [t for _, t in _edge_rows() if t is not None] + [_random_text(random.Random(n), 300)]
+    norm = _normalize(pa.array(texts))
+    flat = "".join(_norm(t) for t in texts)
+    assert "".join(map(chr, _code_points(norm).tolist())) == flat
+    want = [(r, s) for r, t in enumerate(texts) for s in _shingles(t, n)]
+    row, start, end = _spans(norm, n)
+    assert [(r, flat[a:b]) for r, a, b in zip(row, start, end)] == want
+    raw = _utf8(norm).tobytes()
+    row, start, end = _spans(norm, n, pc.binary_length)
+    assert [(r, raw[a:b].decode()) for r, a, b in zip(row, start, end)] == want
+
+
+def test_hot_document_stays_within_chunk_memory():
+    """1,000 short docs around one 1M-char doc: every kernel finishes, and
+    numpy's peak (numpy reports to tracemalloc) stays a small multiple of
+    the largest chunk's code points, not rows x longest doc."""
+    import tracemalloc
+
+    import pyarrow as pa
+
+    from go_tfdata_spark.operators import dedup
+
+    rng = random.Random(7)
+    words = [f"w{i}" for i in range(500)]
+    short = [" ".join(rng.choice(words) for _ in range(rng.randrange(3, 30))) for _ in range(1000)]
+    chunk = max(dedup._CHUNK_CHARS, 1_000_000)
+    for hot in (" ".join(rng.choice(words) for _ in range(300_000))[:1_000_000],
+                _random_text(rng, 1_000_000)):
+        texts = short[:500] + [hot] + short[500:]
+        rb = pa.RecordBatch.from_arrays(
+            [pa.array(range(len(texts)), pa.int64()), pa.array(texts)], names=["id", "text"]
+        )
+        for kernel in (
+            lambda: dedup._minhash_kernel([rb], 3, _minhash_params(16), "id"),
+            lambda: dedup._simhash_kernel([rb], 32, "id"),
+        ):
+            tracemalloc.start()
+            try:
+                rows = sum(b.num_rows for b in kernel())
+                peak = tracemalloc.get_traced_memory()[1]
+            finally:
+                tracemalloc.stop()
+            assert rows == len(texts)
+            assert peak < 48 * chunk, f"peak {peak / 1e6:.1f} MB"
